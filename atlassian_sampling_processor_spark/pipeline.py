@@ -26,10 +26,20 @@ Scale notes (100 TB / 1000 executors):
   (capacity + batch trace count) per tier, so the single-partition
   window is bounded, not O(corpus). For very large capacities, swap to
   a two-level rank (per-partition top-K then global).
-* Micro-batch job count is deliberately minimal: ONE partitioned write
-  for all three sinks with Observation-counted rows (no re-reads), one
-  write per state table, and a driver-side metrics build from the
-  observed counters — fixed overhead per batch stays ~6 Spark actions.
+* Micro-batch fixed cost is the per-batch Spark job count and the
+  driver's planning time, not the rows. A batch runs ONE serial counters
+  action (an aggregation over the per-trace decisions that yields every
+  driver-side counter and plans both cache evictions), then five
+  concurrent output jobs: ONE partitioned write for all three sinks with
+  Observation-counted rows, one write per state table (a direct base
+  write when compaction is due) and the drift guard. State reads are
+  schema-bound (no inference job) and the metrics table is written on
+  the driver. The per-trace frames are local-checkpointed, so later
+  plans scan them instead of re-planning the parse/aggregate lineage.
+  Measured on a 4-CPU VM, trickle-shaped batch (1.5k traces, evicting
+  caches, compaction every batch, perfbench traced): 65 Spark jobs per
+  batch before, 26 after (``tests/test_batch_commit.py`` holds a ceiling
+  of 30).
 """
 
 from __future__ import annotations
@@ -38,6 +48,7 @@ import os
 import time
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,18 +61,15 @@ from .parse import enrich_core, enrich_spans, parse_sequences
 from .policies import Policy
 from .state import (
     DECISION_STATE_SCHEMA,
-    METRICS_SCHEMA,
+    PENDING_SPANS_SCHEMA,
     PENDING_STATE_SCHEMA,
     StateStore,
 )
+from .state import empty_frame as _empty
 
 # columns carried into sinks / pending payload — the original sequence row
 # (byte-exact tokens) + arrival lineage
 PASSTHROUGH = ["doc_id", "tokens", "n_tok", "source", "batch_idx", "flushes"]
-
-PENDING_SPANS_SCHEMA = (
-    "doc_id string, tokens array<int>, n_tok int, source string, batch_idx int, flushes int"
-)
 
 ROUTED_SCHEMA = (
     PENDING_SPANS_SCHEMA
@@ -71,6 +79,8 @@ ROUTED_SCHEMA = (
 
 EVICTION_POLICY = "__evicted__"
 DECISION_SPAN_POLICY = "__decision_span__"
+# the drift guard's label for decision-cache partial-eviction victims
+_DEC_VICTIMS = "__decision_victims__"
 
 
 def plan_decision_eviction(
@@ -123,8 +133,20 @@ def plan_decision_eviction(
     return partial_req, dec_ev_age
 
 
-def _empty(spark: SparkSession, schema) -> DataFrame:
-    return spark.createDataFrame([], schema=schema)
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Lazy local checkpoint: the first action materializes ``df`` into
+    executor blocks; the returned frame's plan is a scan of those blocks,
+    so later plans over it stay small."""
+    return df.localCheckpoint(eager=False)
+
+
+def _release(spark: SparkSession, df: DataFrame) -> None:
+    """Free a local checkpoint's blocks. ``DataFrame.unpersist`` does not
+    reach them, and ``RDD.unpersist`` logs a lineage warning for every
+    checkpointed RDD, so this drops the blocks the way it does, without
+    the warning."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    spark.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
 
 
 class _Prof:
@@ -294,8 +316,8 @@ class SamplingPipeline:
                 F.lit(DECISION_SPAN_POLICY).alias("policy"),
                 F.lit(b).alias("decided_batch"),
             )
-            .persist()
         )
+        new_dec_from_spans = _checkpoint(new_dec_from_spans)
         prof.mark("decision_span_ingest")
         dec_state_mid = dec_state.unionByName(new_dec_from_spans)
 
@@ -319,9 +341,15 @@ class SamplingPipeline:
         agg = aggregate_batch(to_eval, self.policies, b, salt_buckets=self.engine.salt_buckets)
         merged = merge_with_pending(agg, pend_state)
         merged = with_hash_columns(merged, self.policies)
-        decided = post_decision_state(
-            make_decision(merged, self.policies), self.policies
-        ).persist()
+        # per-trace frames (O(batch traces)) are local-checkpointed: the
+        # counters action materializes them once, and every later plan
+        # scans the blocks instead of re-analyzing the parse/aggregate/
+        # decide lineage — on a trickle batch that driver-side planning,
+        # not the rows, was most of the wall. (A lost executor fails the
+        # batch, which replays from the last commit.)
+        decided = _checkpoint(
+            post_decision_state(make_decision(merged, self.policies), self.policies)
+        )
 
         sampled = decided.filter(F.col("decision") == D.SAMPLED)
         not_sampled = decided.filter(F.col("decision") == D.NOT_SAMPLED)
@@ -333,7 +361,7 @@ class SamplingPipeline:
         # -- 4. pending-state rewrite (puts before eviction,
         # tiered_cache.go:41-49). `decided` carries exactly the batch's
         # evaluated trace keys (row-preserving over the agg) and is
-        # persisted — reading it beats recomputing the agg lineage in
+        # checkpointed — reading it beats recomputing the agg lineage in
         # every downstream join that needs the touched key set.
         touched = decided.select("doc_id").unionByName(
             new_dec_from_spans.select("doc_id")
@@ -365,9 +393,12 @@ class SamplingPipeline:
         # victim key-set is identical (tested differentially against the
         # rank plan in tests/test_round5_pending_epochs.py and against
         # the independent simulator in tests/test_differential.py).
-        tier = F.when(F.col("priority") == D.PRIORITY_LOW, F.lit("secondary")).otherwise(
-            F.lit("primary")
-        )
+        def tier_of(priority):
+            return F.when(priority == D.PRIORITY_LOW, F.lit("secondary")).otherwise(
+                F.lit("primary")
+            )
+
+        tier = tier_of(F.col("priority"))
         prim_cap = self.engine.primary_capacity()
         sec_cap = self.engine.secondary_cache_size
         TIERS = ("primary", "secondary")
@@ -396,45 +427,124 @@ class SamplingPipeline:
 
         # delta-shaped epoch moves: touched pending rows leave their old
         # epochs (their keys also become this batch's evict keys), updated
-        # rows enter epoch b. `moved` is O(batch ∩ pending) — tiny — and
-        # reused by the state write below. The evaluated traces' old rows
-        # come straight from the persisted decision frame (the merge
-        # already joined them — cached_* columns), so the eviction step
-        # performs NO full-capacity scan; only the rare decision-span
-        # ingest path needs a pending_state key lookup.
-        moved = decided.filter(F.col("cached_span_count").isNotNull()).select(
-            "doc_id",
-            F.col("cached_last_seen_batch").alias("last_seen_batch"),
-            F.col("cached_priority").alias("priority"),
+        # rows enter epoch b. The evaluated traces' old rows come straight
+        # from the checkpointed decision frame (the merge already joined
+        # them — cached_* columns), so the eviction step performs NO
+        # full-capacity scan; only the decision-span ingest path needs a
+        # pending_state key lookup (broadcast of the tiny ingest set).
+        hit = F.col("cached_span_count").isNotNull()
+        ds_moved = _checkpoint(
+            pend_state.join(
+                F.broadcast(new_dec_from_spans.select("doc_id")), "doc_id", "leftsemi"
+            ).select("doc_id", "last_seen_batch", "priority")
         )
-        if not new_dec_from_spans.isEmpty():
-            moved = moved.unionByName(
-                pend_state.join(
-                    new_dec_from_spans.select("doc_id"), "doc_id", "leftsemi"
-                ).select("doc_id", "last_seen_batch", "priority")
+        moved = (
+            decided.filter(hit)
+            .select(
+                "doc_id",
+                F.col("cached_last_seen_batch").alias("last_seen_batch"),
+                F.col("cached_priority").alias("priority"),
             )
-        moved = moved.persist()
-        mv = (
-            moved.select(
-                F.col("last_seen_batch").alias("e"), tier.alias("t"), F.lit(-1).alias("d")
+            .unionByName(ds_moved)
+        )
+
+        # ONE counters action — the batch's only serial driver sync before
+        # the output jobs. A single aggregation over the checkpointed
+        # `decided` frame, the decision-span ingest and its pending moves
+        # yields, grouped small: the pending epoch moves (-1 at the old
+        # epoch, +1 at epoch b), the policy_decisions / decision_from
+        # counts (decider.go:60-74), cache_reads hits (lru_cache.go:49-58),
+        # per-policy evaluation errors and the decision-span counts. It
+        # also materializes `decided`, `new_dec_from_spans` and `ds_moved`
+        # for every later job.
+        from .decider import decision_from_column
+
+        decisive = F.col("decision").isin(*D.DECISIVE)
+        # policy-error telemetry: traces whose evaluation errored (decision
+        # Unspecified) per TOP-LEVEL policy — the reference's
+        # log-and-continue warning (decider.go:46-48), which fires for ANY
+        # evaluator error, including a propagate OTTL nested inside
+        # and/root_spans/downgrader (the sub's Unspecified propagates to
+        # the composite's decision). Only policies the decider actually
+        # evaluated count (i ≤ decisive index), matching the loop.
+        err_flags = [
+            (
+                (F.col("policy_index").isNull() | (F.lit(i) <= F.col("policy_index")))
+                & (F.element_at("policy_decisions", i + 1) == D.UNSPECIFIED)
+            ).cast("long").alias(f"_e{i}")
+            for i in range(len(self.policies))
+        ]
+        no_err = [F.lit(0).cast("long").alias(f"_e{i}") for i in range(len(self.policies))]
+        null_s, null_i = F.lit(None).cast("string"), F.lit(None).cast("int")
+        counter_rows = (
+            decided.select(
+                F.lit("eval").alias("src"),
+                "decision",
+                F.when(decisive, F.col("policy")).alias("policy"),
+                F.when(decisive, decision_from_column(self.policies)).alias("decision_from"),
+                F.when(hit, F.col("cached_last_seen_batch")).alias("old_e"),
+                F.when(hit, tier_of(F.col("cached_priority"))).alias("old_t"),
+                F.when(
+                    F.col("decision").isin(D.PENDING, D.LOW_PRIORITY),
+                    tier_of(F.col("new_priority")),
+                ).alias("new_t"),
+                *err_flags,
             )
             .unionByName(
-                updated.select(F.lit(b).alias("e"), tier.alias("t"), F.lit(1).alias("d"))
+                new_dec_from_spans.select(
+                    F.lit("span").alias("src"), "decision", null_s.alias("policy"),
+                    null_s.alias("decision_from"), null_i.alias("old_e"),
+                    null_s.alias("old_t"), null_s.alias("new_t"), *no_err,
+                )
             )
-            .groupBy("e", "t")
-            .agg(F.sum("d").alias("d"))
+            .unionByName(
+                ds_moved.select(
+                    F.lit("moved").alias("src"), null_i.alias("decision"),
+                    null_s.alias("policy"), null_s.alias("decision_from"),
+                    F.col("last_seen_batch").alias("old_e"),
+                    tier_of(F.col("priority")).alias("old_t"), null_s.alias("new_t"),
+                    *no_err,
+                )
+            )
+            .groupBy("src", "decision", "policy", "decision_from", "old_e", "old_t", "new_t")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                *[F.sum(f"_e{i}").alias(f"_e{i}") for i in range(len(self.policies))],
+            )
             .collect()
         )
-        for r in mv:
-            c = pcounts.setdefault(int(r["e"]), [0, 0])
-            c[tidx[r["t"]]] += int(r["d"])
-        prof.mark("decide+pending_moves")
+        dec_counts: dict[tuple, int] = {}
+        ds_counts: dict[int, int] = {}
+        err_counts = {p.name: 0 for p in self.policies}
+        n_eval = hits = n_moved = 0
+        for r in counter_rows:
+            n = int(r["n"])
+            if r["old_e"] is not None:
+                pcounts.setdefault(int(r["old_e"]), [0, 0])[tidx[r["old_t"]]] -= n
+                n_moved += n
+            if r["src"] == "span":
+                ds_counts[r["decision"]] = ds_counts.get(r["decision"], 0) + n
+            if r["src"] != "eval":
+                continue
+            n_eval += n
+            hits += n if r["old_e"] is not None else 0
+            if r["new_t"] is not None:
+                pcounts.setdefault(b, [0, 0])[tidx[r["new_t"]]] += n
+            if r["decision"] in D.DECISIVE:
+                key = (r["policy"], r["decision"], r["decision_from"])
+                dec_counts[key] = dec_counts.get(key, 0) + n
+            for i, p in enumerate(self.policies):
+                err_counts[p.name] += int(r[f"_e{i}"] or 0)
+        n_sampled = sum(n for (p, d, g), n in dec_counts.items() if d == D.SAMPLED)
+        n_not_sampled = sum(n for (p, d, g), n in dec_counts.items() if d == D.NOT_SAMPLED)
+        prof.mark("decide+counters")
 
         old_pwm = dict(pwm)
         pre_counts = {e: list(c) for e, c in pcounts.items()}
         partial_pend, planned_ev = plan_decision_eviction(
             pcounts, pwm, caps_pend, b, kinds=TIERS
         )
+        n_evicted = sum(n for n, _ in planned_ev.values())
 
         def pend_slice(e: int) -> DataFrame:
             """Live tier rows of one last_seen epoch as of this batch:
@@ -444,69 +554,45 @@ class SamplingPipeline:
                 return updated
             return self.store.read_epoch_slice(
                 "pending_state", prev, e, PENDING_STATE_SCHEMA
-            ).join(touched, "doc_id", "left_anti")
+            ).join(F.broadcast(touched), "doc_id", "left_anti")
 
-        ev_age = {}  # tier -> sum of eviction ages in batches (see _metrics_rows)
+        def ev_part(df: DataFrame, t: str, e: int) -> DataFrame:
+            return df.select(
+                "doc_id", F.lit(t).alias("tier"), "arrival_batch", F.lit(e).alias("ev_epoch")
+            )
+
         evicted_full = None
         ev_parts = []
         for t in TIERS:
             lo, hi = old_pwm.get(t, -1), pwm.get(t, -1)
-            whole = sorted(
-                e for e in pre_counts
-                if lo < e <= hi and pre_counts[e][tidx[t]] > 0
-            )
-            for e in whole:
-                ev_parts.append(
-                    pend_slice(e)
-                    .filter(tier == t)
-                    .select(
-                        "doc_id", F.lit(t).alias("tier"), "arrival_batch",
-                        F.lit(e).alias("ev_epoch"),
-                    )
-                )
+            for e in sorted(
+                e for e in pre_counts if lo < e <= hi and pre_counts[e][tidx[t]] > 0
+            ):
+                ev_parts.append(ev_part(pend_slice(e).filter(tier == t), t, e))
         for t, e, k in partial_pend:
             # boundary-epoch partial eviction: the k lowest
             # (arrival_batch, doc_id) — exactly the recency rank's victims
-            ev_parts.append(
-                pend_slice(e)
-                .filter(tier == t)
-                .orderBy("arrival_batch", "doc_id")
-                .limit(k)
-                .select(
-                    "doc_id", F.lit(t).alias("tier"), "arrival_batch",
-                    F.lit(e).alias("ev_epoch"),
-                )
-            )
+            ev_parts.append(ev_part(
+                pend_slice(e).filter(tier == t).orderBy("arrival_batch", "doc_id").limit(k),
+                t, e,
+            ))
         if not ev_parts:
             evicted = _empty(self.spark, "doc_id string, tier string")
-            n_evicted = 0
         else:
             evicted_full = ev_parts[0]
             for part in ev_parts[1:]:
                 evicted_full = evicted_full.unionByName(part)
-            evicted_full = evicted_full.persist()
-            # one agg: per-tier counts + eviction AGE (batches since
-            # arrival — trace_eviction_time, processor.go:653-663)
-            ev_stats = (
-                evicted_full.groupBy("tier")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.lit(b) - F.col("arrival_batch")).alias("age"),
-                )
-                .collect()
-            )
-            n_evicted = sum(r["n"] for r in ev_stats)
-            ev_age = {r["tier"]: int(r["age"] or 0) for r in ev_stats}
+            evicted_full = _checkpoint(evicted_full)
             evicted = evicted_full.select("doc_id", "tier")
-            # fail fast if the driver-side counts ever drift from the
-            # stored epochs — silent drift would evict the wrong rows
-            got_ev = {r["tier"]: int(r["n"]) for r in ev_stats}
-            want_ev = {t: n for t, (n, _) in planned_ev.items() if n}
-            if got_ev != want_ev:
-                raise RuntimeError(
-                    f"pending epoch-count drift at batch {b}: planned "
-                    f"evictions {want_ev}, stored epochs yielded {got_ev}"
-                )
+        # the pending removal keys: moved rows' old epochs plus every
+        # eviction victim's (doc_id, epoch) — victims in epoch b are
+        # written with the epoch and killed by their key, one anti-join
+        # for both (whole-epoch victims' keys are redundant with the
+        # watermark but harmless — O(batch) either way)
+        removal = moved.select("doc_id", "last_seen_batch") if n_moved else None
+        if evicted_full is not None:
+            ev_keys = evicted_full.select("doc_id", F.col("ev_epoch").alias("last_seen_batch"))
+            removal = ev_keys if removal is None else removal.unionByName(ev_keys)
 
         # -- 6. route everything to one partitioned sink write. Current-batch
         # spans get their trace's decision in ONE join (the shuffle reuses
@@ -523,7 +609,9 @@ class SamplingPipeline:
             )
 
         span_route = to_eval.join(
-            decided.select("doc_id", F.col("decision").alias("_d"), F.col("policy").alias("_p")),
+            F.broadcast(
+                decided.select("doc_id", F.col("decision").alias("_d"), F.col("policy").alias("_p"))
+            ),
             "doc_id",
             "left",
         )
@@ -559,7 +647,7 @@ class SamplingPipeline:
                 )
             )
         )
-        cached_routed = all_payload.join(outcomes, "doc_id", "inner").select(
+        cached_routed = all_payload.join(F.broadcast(outcomes), "doc_id", "inner").select(
             *PASSTHROUGH,
             F.col("_op").alias("policy"),
             F.col("_reason").alias("reason"),
@@ -625,7 +713,6 @@ class SamplingPipeline:
             )
             .unionByName(new_dec_from_spans)
         )
-        evicted_keys = evicted.select("doc_id")
         # live pending totals are driver arithmetic now (plan mutated
         # pcounts in place) — no full-set count job
         n_pending = sum(
@@ -634,152 +721,31 @@ class SamplingPipeline:
             for t in TIERS
             if e > pwm.get(t, -1)
         )
-
-        # -- 8. run the batch's independent output jobs CONCURRENTLY. The
-        # sink write, the two pending-state writes, and the counters/
-        # decision-cache chain share no data dependencies (everything they
-        # read — `decided`, `evicted`, `new_dec_from_spans` — is persisted
-        # or upstream-complete), so submitting them from threads lets the
-        # scheduler interleave their tasks and overlaps each job's
-        # driver-side planning with the others' execution. Sequential
-        # submission made this latency strictly additive — ~half the
-        # batch's wall at high core counts was the driver waiting between
-        # jobs (the serial term the N→4N scaling criterion punishes).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from .decider import decision_from_column
-
-        def job_routed():
-            return self._write_routed(b, routed)
-
-        def job_pending_state():
-            # O(delta) epoch commit (round 5, mirrors job_decision_state):
-            # epoch b = this batch's still-pending rows; evict keys =
-            # moved rows' old (doc_id, last_seen_batch) pairs plus
-            # eviction victims in older epochs (whole-epoch victims'
-            # keys are redundant with the watermark but harmless — the
-            # volume is O(batch) either way); watermarks + per-epoch
-            # counts ride the versioned evmeta. The reference's in-place
-            # cache puts (lru_cache.go:63-71) cost O(1) per touch; this
-            # is the snapshot-isolation equivalent, now O(1)-in-capacity
-            # on the eviction side too.
-            self.store.write_epoch(
-                "pending_state",
-                b,
-                updated.join(evicted_keys, "doc_id", "left_anti"),
-            )
-            removal = moved.select("doc_id", "last_seen_batch")
-            if evicted_full is not None:
-                removal = removal.unionByName(
-                    evicted_full.filter(F.col("ev_epoch") != b).select(
-                        "doc_id", F.col("ev_epoch").alias("last_seen_batch")
-                    )
-                )
-            self.store.write_evict("pending_state", b, removal)
-            min_pwm = min(pwm.get(t, -1) for t in TIERS)
-            live_counts = {
-                e: c for e, c in pcounts.items()
+        min_pwm = min(pwm.get(t, -1) for t in TIERS)
+        pend_meta = {
+            "wm": dict(pwm),
+            "counts": {
+                str(e): c for e, c in pcounts.items()
                 if e > min_pwm and (c[0] > 0 or c[1] > 0)
-            }
-            self.store.write_evmeta(
-                "pending_state", b,
-                {"wm": dict(pwm),
-                 "counts": {str(e): c for e, c in live_counts.items()}},
-            )
-            if (
-                self.store.n_epochs_since_floor("pending_state", b)
-                >= self.engine.state_compact_every
-            ):
-                self.store.compact_epochs("pending_state", b, PENDING_STATE_SCHEMA)
+            },
+        }
 
-        def job_pending_spans():
-            # payload is append-only while pending: new rows insert with NO
-            # tombstone (older payload of the same trace must survive);
-            # terminal/evicted traces tombstone all their rows
-            self.store.write_delta(
-                "pending_spans",
-                b,
-                prev,
-                inserts=new_pending_payload.join(evicted_keys, "doc_id", "left_anti"),
-                tombstone_keys=outcomes.select("doc_id"),
-                schema=PENDING_SPANS_SCHEMA,
-            )
-
-        def job_counts():
-            # policy_decisions telemetry with the decision_from grouping
-            # dimension (decider.go:60-74), one small collect over the
-            # persisted per-trace decisions
-            dec_counts = {
-                (r["policy"], r["decision"], r["decision_from"]): r["n"]
-                for r in decided.filter(F.col("decision").isin(*D.DECISIVE))
-                .withColumn("decision_from", decision_from_column(self.policies))
-                .groupBy("policy", "decision", "decision_from")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            # policy-error telemetry: count traces whose evaluation
-            # errored (decision Unspecified) per TOP-LEVEL policy — the
-            # reference's log-and-continue warning (decider.go:46-48),
-            # which fires for ANY evaluator error, including a propagate
-            # OTTL nested inside and/root_spans/downgrader (the sub's
-            # Unspecified propagates to the composite's decision). Only
-            # policies the decider actually evaluated count (i ≤
-            # decisive index), matching the loop.
-            prop = [(i, p.name) for i, p in enumerate(self.policies)]
-            agg_exprs = [
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("cached_span_count").isNotNull().cast("long")).alias("hits"),
-            ] + [
-                F.sum(
-                    (
-                        (
-                            F.col("policy_index").isNull()
-                            | (F.lit(i) <= F.col("policy_index"))
-                        )
-                        & (F.element_at("policy_decisions", i + 1) == D.UNSPECIFIED)
-                    ).cast("long")
-                ).alias(f"_e{i}")
-                for i, _ in prop
-            ]
-            # cache_reads hit/miss (lru_cache.go:49-58) share the same agg
-            cache_stats = decided.agg(*agg_exprs).collect()[0]
-            err_counts = {
-                name: int(cache_stats[f"_e{i}"] or 0) for i, name in prop
-            }
-            return dec_counts, cache_stats, err_counts
-
-        def job_decision_state(n_sampled: int, n_not_sampled: int):
-            # Decision caches (two FIFO caches over immutable first-wins
-            # decisions, processor.go:142-148). LRU order ≡ insertion
-            # order because decisions are never recency-refreshed, so
-            # capacity eviction is a pure driver-side watermark advance
-            # over `decided_batch` epochs — O(1) per batch, no job — plus
-            # at most one O(boundary-epoch) partial-evict job. The per-
-            # epoch per-kind counts ride the versioned evmeta JSON; the
-            # evicted key-set is identical to the old full-chain rank
-            # (asserted in tests/test_round4_epochs.py).
-            dec_ev_age: dict[int, tuple[int, int]] = {}
-            if self.engine.sampled_cache_size == 0 and self.engine.non_sampled_cache_size == 0:
-                # nop decision cache (nop_cache.go:11-40): decisions are
-                # never remembered — late spans of a decided trace
-                # re-evaluate from scratch next batch. Truncate (legacy
-                # empty write shadows the whole history) so a checkpoint
-                # that held decisions before a reconfigure forgets them.
-                self.store.write(
-                    "decision_state", b, _empty(self.spark, DECISION_STATE_SCHEMA)
-                )
-                self.store.write_evmeta("decision_state", b, {"wm": {}, "counts": {}})
-                return 0, 0, dec_ev_age
-            # O(delta) epoch append — the ONLY per-batch write
-            self.store.write_epoch("decision_state", b, new_decisions)
-            ds_counts = {
-                r["decision"]: r["n"]
-                for r in new_dec_from_spans.groupBy("decision")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            new_s = n_sampled + ds_counts.get(D.SAMPLED, 0)
-            new_ns = n_not_sampled + n_evicted + ds_counts.get(D.NOT_SAMPLED, 0)
+        # Decision caches (two FIFO caches over immutable first-wins
+        # decisions, processor.go:142-148). LRU order ≡ insertion order
+        # because decisions are never recency-refreshed, so capacity
+        # eviction is a pure driver-side watermark advance over
+        # `decided_batch` epochs — O(1) per batch, no job — plus at most
+        # one O(boundary-epoch) partial eviction. The per-epoch per-kind
+        # counts ride the versioned evmeta JSON; the evicted key-set is
+        # identical to the old full-chain rank (asserted in
+        # tests/test_round4_epochs.py). The plan needs only counters the
+        # driver already holds, so it runs before the output jobs.
+        dec_ev_age: dict[int, tuple[int, int]] = {}
+        partial_req: list[tuple[int, int, int]] = []
+        victims = None
+        tot_s = tot_ns = 0
+        dec_meta = {"wm": {}, "counts": {}}
+        if not nop_dec:
             em = self.store.read_evmeta("decision_state", prev) if prev is not None else None
             if em is None:
                 # first epoch-era batch: derive per-epoch counts from the
@@ -801,30 +767,30 @@ class SamplingPipeline:
                 counts = {int(e): [int(c[0]), int(c[1])] for e, c in em["counts"].items()}
                 wm = {int(k): int(v) for k, v in em["wm"].items()}
             c = counts.setdefault(b, [0, 0])
-            c[0] += new_s
-            c[1] += new_ns
+            c[0] += n_sampled + ds_counts.get(D.SAMPLED, 0)
+            c[1] += n_not_sampled + n_evicted + ds_counts.get(D.NOT_SAMPLED, 0)
             caps = {
                 D.SAMPLED: self.engine.sampled_cache_size,
                 D.NOT_SAMPLED: self.engine.non_sampled_cache_size,
             }
             partial_req, dec_ev_age = plan_decision_eviction(counts, wm, caps, b)
             if partial_req:
-                # read ONE epoch per request (its append file or base
-                # partition directory), never the capacity
-                ev_parts = [
-                    self.store.read_epoch_slice(
-                        "decision_state", b, e, DECISION_STATE_SCHEMA
-                    )
+                # ONE epoch per request (this batch's rows, or an older
+                # epoch's append file / base partition), never the capacity
+                parts = [
+                    (new_decisions if e == b else self.store.read_epoch_slice(
+                        "decision_state", prev, e, DECISION_STATE_SCHEMA
+                    ))
                     .filter(F.col("decision") == kind)
                     .orderBy("doc_id")
                     .limit(k)
                     .select("doc_id", "decided_batch")
                     for kind, e, k in partial_req
                 ]
-                ev = ev_parts[0]
-                for part in ev_parts[1:]:
-                    ev = ev.unionByName(part)
-                self.store.write_evict("decision_state", b, ev)
+                victims = parts[0]
+                for part in parts[1:]:
+                    victims = victims.unionByName(part)
+                victims = _checkpoint(victims)
             # an epoch is fully dead only when BOTH kinds' watermarks have
             # passed it (a kind absent from wm has watermark -1)
             min_wm = min(wm.get(D.SAMPLED, -1), wm.get(D.NOT_SAMPLED, -1))
@@ -832,42 +798,130 @@ class SamplingPipeline:
                 e: cnt for e, cnt in counts.items()
                 if e > min_wm and (cnt[0] > 0 or cnt[1] > 0)
             }
-            self.store.write_evmeta(
-                "decision_state", b,
-                {"wm": {str(k): v for k, v in wm.items()},
-                 "counts": {str(e): cnt for e, cnt in counts.items()}},
-            )
-            if (
-                self.store.n_epochs_since_floor("decision_state", b)
-                >= self.engine.state_compact_every
-            ):
-                self.store.compact_epochs("decision_state", b, DECISION_STATE_SCHEMA)
+            dec_meta = {
+                "wm": {str(k): v for k, v in wm.items()},
+                "counts": {str(e): cnt for e, cnt in counts.items()},
+            }
             tot_s = sum(cnt[0] for e, cnt in counts.items() if e > wm.get(D.SAMPLED, -1))
             tot_ns = sum(
                 cnt[1] for e, cnt in counts.items() if e > wm.get(D.NOT_SAMPLED, -1)
             )
-            return tot_s, tot_ns, dec_ev_age
+        n_victims = sum(k for _, _, k in partial_req)
 
-        def job_counts_then_decisions():
-            dec_counts, cache_stats, err_counts = job_counts()
-            n_s = sum(n for (p, d, g), n in dec_counts.items() if d == D.SAMPLED)
-            n_ns = sum(n for (p, d, g), n in dec_counts.items() if d == D.NOT_SAMPLED)
-            return dec_counts, cache_stats, err_counts, n_s, n_ns, job_decision_state(n_s, n_ns)
+        # -- 8. run the batch's independent output jobs CONCURRENTLY. The
+        # sink write, the three state writes and the drift guard share no
+        # data dependencies (everything they read — `decided`, `evicted`,
+        # `new_dec_from_spans` — is checkpointed or upstream-complete), so
+        # submitting them from threads lets the scheduler interleave their
+        # tasks and overlaps each job's driver-side planning with the
+        # others' execution. Sequential submission made this latency
+        # strictly additive — ~half the batch's wall at high core counts
+        # was the driver waiting between jobs.
+        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            f_routed = ex.submit(job_routed)
-            f_pend_state = ex.submit(job_pending_state)
-            f_pend_spans = ex.submit(job_pending_spans)
-            f_chain = ex.submit(job_counts_then_decisions)
+        def job_routed():
+            return self._write_routed(b, routed)
+
+        def job_pending_state():
+            # O(delta) epoch commit (round 5, mirrors the decision
+            # caches): epoch b = this batch's pending rows; removal keys =
+            # moved and evicted rows' (doc_id, last_seen_batch) pairs;
+            # watermarks + per-epoch counts ride the versioned evmeta — or,
+            # when compaction is due, one direct base write.
+            # The reference's in-place cache puts (lru_cache.go:63-71) cost
+            # O(1) per touch; this is the snapshot-isolation equivalent,
+            # O(1)-in-capacity on the eviction side too.
+            self.store.write_epoch_batch(
+                "pending_state", b, prev,
+                rows=updated,
+                removal=removal,
+                meta=pend_meta,
+            )
+
+        def job_pending_spans():
+            # payload is append-only while pending: new rows insert with NO
+            # tombstone (older payload of the same trace must survive);
+            # terminal/evicted traces tombstone all their rows
+            # (new pending payload meets the terminal keys only through
+            # evicted traces, so one broadcast key set serves both sides)
+            terminal = outcomes.select("doc_id")
+            self.store.write_delta(
+                "pending_spans",
+                b,
+                prev,
+                inserts=new_pending_payload.join(F.broadcast(terminal), "doc_id", "left_anti"),
+                tombstone_keys=terminal,
+                schema=PENDING_SPANS_SCHEMA,
+            )
+
+        def job_guard() -> dict[str, int]:
+            """Fail-loud drift guard: the stored epochs must yield exactly
+            the evictions the driver-side counts planned — silent drift
+            would evict the wrong rows. One scan of the (O(batch)) victim
+            sets, collected like a broadcast, no shuffle; also yields the
+            pending eviction AGE per tier (batches since arrival —
+            trace_eviction_time, processor.go:653-663)."""
+            parts = []
+            if evicted_full is not None:
+                parts.append(evicted_full.select("tier", (F.lit(b) - F.col("arrival_batch")).alias("age")))
+            if victims is not None:
+                parts.append(victims.select(F.lit(_DEC_VICTIMS).alias("tier"), F.lit(0).alias("age")))
+            if not parts:
+                return {}
+            rows = parts[0]
+            for part in parts[1:]:
+                rows = rows.unionByName(part)
+            got: dict[str, list[int]] = {}
+            for r in rows.collect():
+                g = got.setdefault(r["tier"], [0, 0])
+                g[0] += 1
+                g[1] += r["age"]
+            got_ev = {t: n for t, (n, _) in got.items() if t != _DEC_VICTIMS}
+            want_ev = {t: n for t, (n, _) in planned_ev.items() if n}
+            if got_ev != want_ev:
+                raise RuntimeError(
+                    f"pending epoch-count drift at batch {b}: planned "
+                    f"evictions {want_ev}, stored epochs yielded {got_ev}"
+                )
+            got_victims = got.get(_DEC_VICTIMS, [0, 0])[0]
+            if got_victims != n_victims:
+                raise RuntimeError(
+                    f"decision epoch-count drift at batch {b}: planned "
+                    f"{n_victims} partial evictions, stored epochs yielded {got_victims}"
+                )
+            return {t: age for t, (_, age) in got.items() if t != _DEC_VICTIMS}
+
+        def job_decision_state():
+            if nop_dec:
+                # nop decision cache (nop_cache.go:11-40): decisions are
+                # never remembered — late spans of a decided trace
+                # re-evaluate from scratch next batch. Truncate (legacy
+                # empty write shadows the whole history) so a checkpoint
+                # that held decisions before a reconfigure forgets them.
+                self.store.write("decision_state", b, [])
+                self.store.write_evmeta("decision_state", b, dec_meta)
+            else:
+                self.store.write_epoch_batch(
+                    "decision_state", b, prev,
+                    rows=new_decisions, removal=victims, meta=dec_meta,
+                )
+
+        # pool threads inherit the caller's job group and description, so
+        # every job of the batch is attributed to it (UI, event log, tests)
+        with ThreadPoolExecutor(max_workers=5) as ex:
+            f_routed, f_pend_state, f_pend_spans, f_dec, f_guard = (
+                ex.submit(inheritable_thread_target(self.spark)(job))
+                for job in (
+                    job_routed, job_pending_state, job_pending_spans,
+                    job_decision_state, job_guard,
+                )
+            )
             sink_counts = f_routed.result()
             f_pend_state.result()
             f_pend_spans.result()
-            (
-                dec_counts, cache_stats, err_counts,
-                n_sampled, n_not_sampled, dec_state_out,
-            ) = f_chain.result()
-        tot_s, tot_ns, dec_ev_age = dec_state_out
-        prof.mark("concurrent_writes+counts")
+            f_dec.result()
+            ev_age = f_guard.result()
+        prof.mark("concurrent_writes")
 
         res = BatchResult(
             batch_idx=b,
@@ -879,8 +933,6 @@ class SamplingPipeline:
             evicted_traces=n_evicted,
             pending_traces=n_pending,
         )
-        hits = int(cache_stats["hits"] or 0)
-        misses = int(cache_stats["n"] or 0) - hits
         self.store.write(
             "metrics",
             b,
@@ -889,7 +941,7 @@ class SamplingPipeline:
                 dec_counts,
                 res,
                 hits=hits,
-                misses=misses,
+                misses=n_eval - hits,
                 internal_errors=sink_counts["interr"],
                 ev_age=ev_age,
                 dec_ev_age=dec_ev_age,
@@ -901,10 +953,9 @@ class SamplingPipeline:
         self.store.commit(b, meta={"dec_sampled": tot_s, "dec_not_sampled": tot_ns})
         prof.mark("commit")
 
-        for df in (decided, new_dec_from_spans, moved):
-            df.unpersist()
-        if evicted_full is not None:
-            evicted_full.unpersist()
+        for df in (decided, new_dec_from_spans, ds_moved, evicted_full, victims):
+            if df is not None:
+                _release(self.spark, df)
         return res
 
     # -------------------------------------------------------------- telemetry
@@ -921,10 +972,11 @@ class SamplingPipeline:
         dec_ev_age: dict | None = None,
         batch_wall_ms: int = 0,
         err_counts: dict | None = None,
-    ) -> DataFrame:
-        """Per-batch metrics table mirroring the reference's counters
+    ) -> list[tuple]:
+        """Per-batch metrics table rows mirroring the reference's counters
         (documentation.md:9-79; emission sites per BASELINE.md). Built
-        driver-side from already-collected counters — zero extra jobs."""
+        driver-side from already-collected counters and written by the
+        store with pyarrow — no Spark job."""
         rows = [
             (
                 b,
@@ -982,7 +1034,7 @@ class SamplingPipeline:
             rows.append(
                 (b, "decision_evictions", {"decision": D.DECISION_NAMES[dec]}, n)
             )
-        return self.spark.createDataFrame(rows, schema=METRICS_SCHEMA)
+        return rows
 
     # ------------------------------------------------------------------- run
 
@@ -1037,12 +1089,10 @@ class SamplingPipeline:
         dec_export.write.mode("overwrite").parquet(f"{self.out}/decision_export/batch={b}")
         n_dec = dec_export.count()
 
-        self.store.write("pending_state", b, _empty(self.spark, PENDING_STATE_SCHEMA))
+        for table in ("pending_state", "pending_spans", "decision_state", "metrics"):
+            self.store.write(table, b, [])
         self.store.write_evmeta("pending_state", b, {"wm": {}, "counts": {}})
-        self.store.write("pending_spans", b, _empty(self.spark, PENDING_SPANS_SCHEMA))
-        self.store.write("decision_state", b, _empty(self.spark, DECISION_STATE_SCHEMA))
         self.store.write_evmeta("decision_state", b, {"wm": {}, "counts": {}})
-        self.store.write("metrics", b, _empty(self.spark, METRICS_SCHEMA))
         self.store.commit(b)
         return {"flushed_rows": counts["kept"], "decision_rows": n_dec}
 

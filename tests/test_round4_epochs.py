@@ -123,7 +123,7 @@ def _routed(pipe):
     return sorted(got)
 
 
-@pytest.mark.parametrize("compact_every", [3, 8])
+@pytest.mark.parametrize("compact_every", [1, 3, 8])
 def test_epoch_eviction_differential(spark, tmp_path, compact_every):
     eng_spans, sim_batches = _scenario()
     pipe = _mk(spark, tmp_path, f"ce{compact_every}", state_compact_every=compact_every)

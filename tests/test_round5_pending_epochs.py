@@ -135,7 +135,7 @@ def _sim_pend(sim_batches, upto):
     }
 
 
-@pytest.mark.parametrize("compact_every", [3, 8])
+@pytest.mark.parametrize("compact_every", [1, 3, 8])
 def test_pending_epoch_eviction_differential(spark, tmp_path, compact_every):
     """Sinks AND the pending state at EVERY committed version match the
     independent simulator's recency rank — watermark/move/boundary
