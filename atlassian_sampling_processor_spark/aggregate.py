@@ -91,8 +91,8 @@ def aggregate_batch(
 
 
 def with_hash_columns(df: DataFrame, policies: list[Policy]) -> DataFrame:
-    """Add one FNV-1a64 column per distinct salt (post-agg: one hash per
-    trace, not per span — the Arrow exchange moves O(traces) rows)."""
+    """Add one Catalyst FNV-1a64 column per distinct salt, computed after
+    the aggregation (so once per trace, not per span)."""
     for salt in sorted(collect_hash_salts(policies)):
         name = hash_col_name(salt)
         if name not in df.columns:

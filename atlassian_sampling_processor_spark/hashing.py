@@ -8,11 +8,10 @@ computed with exact integer math (Go uses big.Float; Python ints are
 exact too, with the same saturation at [0, 2^64−1] for out-of-range
 rates, matching probabilistic_test.go's −50%→0 / 150%→100 cases).
 
-The per-row hash is a vectorized pandas UDF over the two signed-int64
-halves of the trace id (numpy uint64 modular arithmetic — no per-row
-Python). Unsigned ``hash <= threshold`` comparison is then done JVM-side
-by XOR-ing both sides with 2^63 (order-preserving signed mapping), so
-only the hash itself crosses the Python boundary.
+The per-trace hash ``fnv_hash_column`` is one Catalyst expression (no
+Python worker starts); the numpy kernel ``_hash_batch`` is its test
+oracle. Unsigned ``hash <= threshold`` is compared JVM-side by XOR-ing
+both sides with 2^63 (order-preserving signed mapping).
 """
 
 from __future__ import annotations
@@ -26,6 +25,8 @@ from pyspark.sql.pandas.functions import pandas_udf
 FNV_OFFSET = 14695981039346656037  # FNV-1a 64 offset basis
 FNV_PRIME = 1099511628211
 MASK64 = (1 << 64) - 1
+M32 = (1 << 32) - 1
+_PRIME_LO = FNV_PRIME - (1 << 40)  # 0x1b3
 DEFAULT_HASH_SALT = "default-hash-seed"  # probabilistic.go:20-22
 
 
@@ -62,19 +63,37 @@ def _hash_batch(hi: np.ndarray, lo: np.ndarray, h0: int) -> np.ndarray:
 
 
 def fnv_hash_column(salt: str) -> Column:
-    """Column factory: (trace_hi, trace_lo) → signed-int64 FNV-1a64 hash.
+    """Column factory: (trace_hi, trace_lo) → signed-int64 FNV-1a64 hash
+    of ``salt ‖ 16 id bytes``, as one Catalyst expression.
 
-    One Arrow-batched UDF per distinct salt; probabilistic policies that
-    share a salt share the column.
+    The state h = hi·2^32 + lo is kept in 32-bit limbs. The prime is
+    2^40 + 0x1b3, so with l = lo ^ byte and p = l·0x1b3, h·prime mod 2^64
+    has low limb p mod 2^32 and high limb hi·0x1b3 + (p >> 32) + (l << 8)
+    mod 2^32 (the hi·2^72 term vanishes). Every intermediate is below
+    2^42, so ANSI long arithmetic never overflows.
     """
     h0 = fnv1a64(salt.encode("utf-8"))
+    id_bytes = F.array(*[
+        F.shiftrightunsigned(F.col(c), 8 * (7 - i)).bitwiseAND(F.lit(0xFF))
+        for c in ("trace_hi", "trace_lo")
+        for i in range(8)
+    ])
 
-    @pandas_udf("long")
-    def _fnv(hi: pd.Series, lo: pd.Series) -> pd.Series:
-        out = _hash_batch(hi.to_numpy(), lo.to_numpy(), h0)
-        return pd.Series(out.view(np.int64))
+    def step(acc: Column, byte: Column) -> Column:
+        lo = acc["lo"].bitwiseXOR(byte)
+        p = lo * F.lit(_PRIME_LO)
+        return F.struct(
+            (acc["hi"] * F.lit(_PRIME_LO) + F.shiftright(p, 32) + F.shiftleft(lo, 8))
+            .bitwiseAND(F.lit(M32)).alias("hi"),
+            p.bitwiseAND(F.lit(M32)).alias("lo"),
+        )
 
-    return _fnv(F.col("trace_hi"), F.col("trace_lo"))
+    init = F.struct(
+        F.lit(h0 >> 32).cast("long").alias("hi"), F.lit(h0 & M32).cast("long").alias("lo")
+    )
+    return F.aggregate(
+        id_bytes, init, step, lambda acc: F.shiftleft(acc["hi"], 32).bitwiseOR(acc["lo"])
+    )
 
 
 def _encode_batch(s: pd.Series):
@@ -129,9 +148,6 @@ def fnv1a64_string_column(c: Column) -> Column:
         return out.mask(null).astype("Int64")
 
     return _fnv_str(c)
-
-
-M32 = (1 << 32) - 1
 
 
 def murmur3_32(data: bytes, seed: int = 0) -> int:

@@ -2,9 +2,8 @@
 
 The hot-path decode is pure Catalyst expressions over the fixed-width
 header (``parse_sequences``) — zero Python, fully inside whole-stage
-codegen, column-pruned per consumer. An Arrow-batched struct pandas UDF
-(``parse_sequences_pandas``, numpy decode) is kept as the vectorized-UDF
-reference implementation and cross-checked bit-for-bit in tests. All
+codegen, column-pruned per consumer; tests cross-check it bit-for-bit
+against the codec's numpy decode (``codec.decode_headers``). All
 string/map materialization (status names, attr maps, threshold attr
 string) is separate Catalyst expressions in :func:`enrich_spans`. The
 stage is a narrow map — no shuffle until the per-trace aggregation.
@@ -18,17 +17,13 @@ internal/evaluators/root_spans.go:79-89).
 
 from __future__ import annotations
 
-
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
 
-# numeric columns produced by the decode UDF (beyond passthrough)
+# numeric columns produced by the decoder (beyond passthrough)
 DECODED_FIELDS = [
     ("trace_hi", T.LongType()),
     ("trace_lo", T.LongType()),
@@ -49,52 +44,9 @@ DECODED_FIELDS = [
 ]
 
 
-_DECODE_STRUCT = T.StructType([T.StructField(n, t, True) for n, t in DECODED_FIELDS])
-
-
-def _decode_tokens_np(vals: np.ndarray) -> dict[str, np.ndarray]:
-    n = len(vals)
-    flat = np.concatenate([np.asarray(v, dtype=np.int32) for v in vals])
-    lengths = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    head_idx = offsets[:-1, None] + np.arange(codec.HEADER_LEN)[None, :]
-    return codec.decode_headers(flat[head_idx])
-
-
-def _decode_to_frame(tokens: pd.Series) -> pd.DataFrame:
-    if len(tokens) == 0:
-        return pd.DataFrame({n: pd.Series(dtype="object") for n, _ in DECODED_FIELDS})
-    d = _decode_tokens_np(tokens.to_numpy())
-    out = {}
-    for name in ("trace_hi", "trace_lo", "span_id", "parent_span_id", "start_ts", "end_ts"):
-        out[name] = d[name].view(np.int64)
-    out["status_id"] = d["status_code"]
-    out["threshold_len"] = d["threshold_len"]
-    out["threshold_value"] = d["threshold_value"].view(np.int64)
-    out["name_id"] = d["name_id"]
-    out["is_decision_span"] = d["is_decision_span"].astype(bool)
-    out["decision_value"] = d["decision_value"].astype(bool)
-    out["flushes"] = d["flushes"]
-    out["event_name_id"] = d["event_name_id"]
-    out["attr_code"] = d["attr_code"]
-    out["event_attr_code"] = d["event_attr_code"]
-    return pd.DataFrame(out)
-
-
-def parse_sequences_pandas(df: DataFrame) -> DataFrame:
-    """tokens → numeric span fields via a struct-returning Arrow pandas
-    UDF (numpy decode). Kept as the reference implementation / test
-    oracle for the expression decoder below."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf(returnType=_DECODE_STRUCT)
-    def _decode(tokens: pd.Series) -> pd.DataFrame:
-        return _decode_to_frame(tokens)
-
-    clash = [n for n, _ in DECODED_FIELDS if n in df.columns]
-    dec = df.drop(*clash).withColumn("_dec", _decode(F.col("tokens")))
-    return dec.select("*", *[F.col(f"_dec.{n}").alias(n) for n, _ in DECODED_FIELDS]).drop("_dec")
+# header slots the routed write reads off raw (undecoded) rows
+DECISION_SPAN_SLOT = 33
+FLUSHES_SLOT = 35
 
 
 def _el(i: int):
@@ -118,8 +70,7 @@ def parse_sequences(df: DataFrame) -> DataFrame:
 
     Zero Python on the hot path: the token payload never leaves the JVM,
     the whole decode lives inside whole-stage codegen, and the stage is a
-    narrow map. ``parse_sequences_pandas`` is the vectorized-UDF
-    equivalent kept for cross-checking (tests/test_parse.py).
+    narrow map.
     """
     clash = [n for n, _ in DECODED_FIELDS if n in df.columns]
     out = df.drop(*clash)
@@ -134,14 +85,31 @@ def parse_sequences(df: DataFrame) -> DataFrame:
         "threshold_len": _el(27).cast("int"),
         "threshold_value": _u64(28),
         "name_id": _el(32).cast("int"),
-        "is_decision_span": (_el(33) == 1),
+        "is_decision_span": (_el(DECISION_SPAN_SLOT) == 1),
         "decision_value": (_el(34) == 1),
-        "flushes": _el(35).cast("int"),
+        "flushes": _el(FLUSHES_SLOT).cast("int"),
         "event_name_id": _el(36).cast("int"),
         "attr_code": _el(37).cast("int"),
         "event_attr_code": _el(39).cast("int"),
     }
     return out.withColumns(cols)
+
+
+def _flush_count(c):
+    """The header's flush count, NULL when absent (encoded as -1)."""
+    return F.when(c >= 0, c)
+
+
+def routing_fields(valid):
+    """(is decision span, flush count) read straight off a raw row's
+    tokens, NULL unless ``valid`` (the header check) holds — so ANSI
+    never indexes a short array. The flush count is normalized exactly as
+    in :func:`enrich_core`."""
+
+    def slot(i):
+        return F.when(valid, F.try_element_at("tokens", F.lit(i + 1)))
+
+    return slot(DECISION_SPAN_SLOT) == 1, _flush_count(slot(FLUSHES_SLOT))
 
 
 def _attr_map(code_col: str):
@@ -174,7 +142,7 @@ def enrich_core(df: DataFrame) -> DataFrame:
         df.withColumn(
             "is_root",
             (F.col("parent_span_id") == 0) | (F.col("parent_span_id") == F.col("trace_lo")),
-        ).withColumn("flushes", F.when(F.col("flushes") >= 0, F.col("flushes")))
+        ).withColumn("flushes", _flush_count(F.col("flushes")))
     )
 
 

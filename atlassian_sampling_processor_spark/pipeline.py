@@ -10,7 +10,7 @@ slice at once:
   groupBy(doc_id) agg                     NewTraceData metadata (tracedata.go:24-62)
   left join pending_state + merge exprs   Metadata.MergeWith (metadata.go:29-39)
   ordered when/coalesce decision chain    decider.MakeDecision (decider.go:41-81)
-  fan-out to keep/drop/low sinks          processor.go:369-404, 515-536
+  one routing pass over the arrivals      processor.go:369-404, 515-536
   window-rank capacity eviction           tiered_cache.go:41-49 + lru eviction
   state write + atomic commit             resumability (DESIGN.md:148-167)
 
@@ -19,6 +19,13 @@ Scale notes (100 TB / 1000 executors):
   pruned numeric columns (partial aggregation map-side), and routing
   joins broadcast the small per-trace decision tables. The reference's
   shard co-location (util.go:42-49) is the agg's hash partitioning.
+* Routing scans each arrival slice once: one frame reads the header
+  check and two header slots (decision-span flag, flush count), joins
+  the early-decision state and the per-trace outcomes, and one ``when``
+  chain gives every span its (sink, reason, policy). The pending-spans
+  inserts are the same frame's still-pending rows. Nothing on the
+  decide path runs Python (the probabilistic hash is a Catalyst
+  expression), so a batch starts no Python worker.
 * State joins are on doc_id; with Iceberg/bucketed state tables they're
   co-partitioned and shuffle-free. Here (plain parquet) AQE picks
   broadcast when state is small.
@@ -38,8 +45,9 @@ Scale notes (100 TB / 1000 executors):
   plans scan them instead of re-planning the parse/aggregate lineage.
   Measured on a 4-CPU VM, trickle-shaped batch (1.5k traces, evicting
   caches, compaction every batch, perfbench traced): 65 Spark jobs per
-  batch before, 26 after (``tests/test_batch_commit.py`` holds a ceiling
-  of 30).
+  batch before the counters action and direct compaction, 26–27 after,
+  24 with one-pass routing (``tests/test_batch_commit.py`` holds its
+  tiny trickle-shaped batch to 24).
 """
 
 from __future__ import annotations
@@ -57,7 +65,7 @@ from . import decision as D
 from .aggregate import aggregate_batch, merge_with_pending, with_hash_columns
 from .config import EngineConfig
 from .decider import make_decision, post_decision_state
-from .parse import enrich_core, enrich_spans, parse_sequences
+from .parse import enrich_core, enrich_spans, parse_sequences, routing_fields
 from .policies import Policy
 from .state import (
     DECISION_STATE_SCHEMA,
@@ -281,9 +289,10 @@ class SamplingPipeline:
         # names) is only materialized when a configured policy actually
         # reads it (OTTL); the numeric core carries everything else.
         enrich = enrich_spans if self._needs_span_strings() else enrich_core
-        # no persist: every consumer branch column-prunes its own scan of
-        # the (page-cached) batch parquet, which beats materializing the
-        # full token payload into the block store
+        # no persist: the decision-span ingest, the aggregate and the
+        # routing frame each column-prune their own scan of the
+        # (page-cached) batch parquet, which beats materializing the full
+        # token payload into the block store
         # internal-error guard (reportTraceDataErr, processor.go:676-680):
         # rows whose token header fails validation can't be decoded —
         # routed to the drop sink with reason=internal_error and counted
@@ -297,7 +306,6 @@ class SamplingPipeline:
             & (F.try_element_at("tokens", F.lit(2)) == codec.VERSION),
             F.lit(False),  # NULL (e.g. null tokens) counts as invalid
         )
-        bad_spans = raw_batch.filter(~valid)
         spans = enrich(parse_sequences(raw_batch.filter(valid)))
         reg = spans.filter(~F.col("is_decision_span"))
         dec_spans = spans.filter(F.col("is_decision_span"))
@@ -321,16 +329,10 @@ class SamplingPipeline:
         prof.mark("decision_span_ingest")
         dec_state_mid = dec_state.unionByName(new_dec_from_spans)
 
-        # -- 2. early decision check (processor.go:408-430): one join serves
-        # both the pre-shard check and the per-shard recheck.
-        reg2 = reg.join(
-            dec_state_mid.select("doc_id", F.col("decision").alias("prior_decision")),
-            "doc_id",
-            "left",
-        )
-        late_sampled = reg2.filter(F.col("prior_decision") == D.SAMPLED)
-        late_dropped = reg2.filter(F.col("prior_decision") == D.NOT_SAMPLED)
-        to_eval = reg2.filter(F.col("prior_decision").isNull()).drop("prior_decision")
+        # -- 2. early decision check (processor.go:408-430): only traces
+        # with no decision yet are evaluated; the routing frame (step 6)
+        # releases or drops the late spans of decided ones.
+        to_eval = reg.join(dec_state_mid.select("doc_id"), "doc_id", "left_anti")
 
         decspan_sampled = new_dec_from_spans.filter(F.col("decision") == D.SAMPLED).select("doc_id")
         decspan_notsampled = new_dec_from_spans.filter(
@@ -594,75 +596,82 @@ class SamplingPipeline:
             ev_keys = evicted_full.select("doc_id", F.col("ev_epoch").alias("last_seen_batch"))
             removal = ev_keys if removal is None else removal.unionByName(ev_keys)
 
-        # -- 6. route everything to one partitioned sink write. Current-batch
-        # spans get their trace's decision in ONE join (the shuffle reuses
-        # the doc_id partitioning); cached payload resolves against a small
-        # per-trace outcome table in one more join.
-        def tag(df, sink, reason, policy_col=None):
-            pol = policy_col if policy_col is not None else F.lit(None).cast("string")
-            return df.select(
-                *PASSTHROUGH,
-                pol.alias("policy"),
-                F.lit(reason).alias("reason"),
-                F.lit(None).cast("int").alias("flushes_out"),
-                F.lit(sink).alias("sink"),
+        # -- 6. route everything to one partitioned sink write. Each span
+        # is released once, after its trace's one decision
+        # (processor.go:369-404): ONE frame over the arrival slice joins
+        # the early-decision state and the broadcast per-trace outcomes,
+        # and one `when` chain gives each span its (sink, reason, policy).
+        # Still-pending spans get sink "pending" (the pending_spans
+        # inserts); consumed decision spans get none.
+        def status(sink, reason, policy=F.lit(None).cast("string")):
+            return F.struct(
+                F.lit(sink).alias("sink"), F.lit(reason).alias("reason"), policy.alias("policy")
             )
 
-        span_route = to_eval.join(
-            F.broadcast(
-                decided.select("doc_id", F.col("decision").alias("_d"), F.col("policy").alias("_p"))
-            ),
-            "doc_id",
-            "left",
+        is_decision_span, header_flushes = routing_fields(valid)
+        evicted_pol = F.lit(EVICTION_POLICY)
+        prior, d, tier_c = F.col("_prior"), F.col("_d"), F.col("tier")
+        route = (
+            F.when(~valid, status("drop", "internal_error"))
+            .when(is_decision_span, None)
+            .when(prior == D.SAMPLED, status("keep", "late_sampled"))
+            .when(prior == D.NOT_SAMPLED, status("drop", "late_not_sampled"))
+            .when(d == D.SAMPLED, status("keep", "sampled", F.col("_p")))
+            .when(d == D.NOT_SAMPLED, status("drop", "not_sampled", F.col("_p")))
+            .when(tier_c == "primary", status("drop", "evicted_primary", evicted_pol))
+            .when(tier_c == "secondary", status("low_priority", "evicted_secondary", evicted_pol))
+            .when(d.isin(D.PENDING, D.LOW_PRIORITY), status("pending", None))
         )
-        new_pending_payload = span_route.filter(F.col("_d").isin(D.PENDING, D.LOW_PRIORITY)).select(
-            *PASSTHROUGH
+        arrivals = (
+            raw_batch.join(
+                dec_state_mid.select("doc_id", F.col("decision").alias("_prior")), "doc_id", "left"
+            )
+            .join(F.broadcast(decided.select(
+                "doc_id", F.col("decision").alias("_d"), F.col("policy").alias("_p")
+            )), "doc_id", "left")
+            .join(F.broadcast(evicted), "doc_id", "left")
+            .select(
+                *PASSTHROUGH[:-1],
+                # the header's flush count (-1 ⇒ absent) for decodable rows,
+                # the input column for undecodable ones
+                F.when(valid, header_flushes).otherwise(F.col("flushes")).alias("flushes"),
+                route.alias("_r"),
+            )
+            .filter(F.col("_r").isNotNull())
         )
-        all_payload = pend_spans.unionByName(new_pending_payload)
+        pending_inserts = arrivals.filter(F.col("_r.sink") == "pending").select(*PASSTHROUGH)
 
         # disjoint per-trace outcomes for the cached payload: a sampled /
         # not-sampled doc has payload only in old pend_spans; an evicted doc
-        # may have payload in either
-        def outcome(keys, sink, reason, policy_col=None):
-            pol = policy_col if policy_col is not None else F.lit(None).cast("string")
-            return keys.select(
-                "doc_id", pol.alias("_op"), F.lit(sink).alias("_sink"), F.lit(reason).alias("_reason")
-            )
+        # may have payload in either (its arrivals route above)
+        def outcome(keys, *st):
+            return keys.select("doc_id", status(*st).alias("_r"))
 
+        ds_pol = F.lit(DECISION_SPAN_POLICY)
         outcomes = (
             outcome(sampled_keys, "keep", "sampled_cached", F.col("policy"))
             .unionByName(outcome(not_sampled_keys, "drop", "not_sampled_cached", F.col("policy")))
-            .unionByName(outcome(decspan_sampled, "keep", "decision_span_release", F.lit(DECISION_SPAN_POLICY)))
-            .unionByName(outcome(decspan_notsampled, "drop", "decision_span_drop", F.lit(DECISION_SPAN_POLICY)))
-            .unionByName(
-                outcome(
-                    evicted.filter(F.col("tier") == "primary"), "drop", "evicted_primary",
-                    F.lit(EVICTION_POLICY),
-                )
-            )
-            .unionByName(
-                outcome(
-                    evicted.filter(F.col("tier") == "secondary"), "low_priority",
-                    "evicted_secondary", F.lit(EVICTION_POLICY),
-                )
+            .unionByName(outcome(decspan_sampled, "keep", "decision_span_release", ds_pol))
+            .unionByName(outcome(decspan_notsampled, "drop", "decision_span_drop", ds_pol))
+            .unionByName(outcome(
+                evicted.filter(F.col("tier") == "primary"), "drop", "evicted_primary", evicted_pol
+            ))
+            .unionByName(outcome(
+                evicted.filter(F.col("tier") == "secondary"),
+                "low_priority", "evicted_secondary", evicted_pol,
+            ))
+        )
+        cached_routed = pend_spans.join(F.broadcast(outcomes), "doc_id", "inner").select(
+            *PASSTHROUGH, "_r"
+        )
+        routed = (
+            arrivals.filter(F.col("_r.sink") != "pending")
+            .unionByName(cached_routed)
+            .select(
+                *PASSTHROUGH, "_r.policy", "_r.reason",
+                F.lit(None).cast("int").alias("flushes_out"), "_r.sink",
             )
         )
-        cached_routed = all_payload.join(F.broadcast(outcomes), "doc_id", "inner").select(
-            *PASSTHROUGH,
-            F.col("_op").alias("policy"),
-            F.col("_reason").alias("reason"),
-            F.lit(None).cast("int").alias("flushes_out"),
-            F.col("_sink").alias("sink"),
-        )
-
-        routed_parts = [
-            tag(late_sampled, "keep", "late_sampled"),
-            tag(span_route.filter(F.col("_d") == D.SAMPLED), "keep", "sampled", F.col("_p")),
-            tag(late_dropped, "drop", "late_not_sampled"),
-            tag(span_route.filter(F.col("_d") == D.NOT_SAMPLED), "drop", "not_sampled", F.col("_p")),
-            tag(bad_spans, "drop", "internal_error"),
-            cached_routed,
-        ]
         # not-sampled placeholder rows (processor.go:517-533)
         emit_names = [n for n, v in self._emit_placeholder.items() if v]
         if emit_names:
@@ -678,11 +687,7 @@ class SamplingPipeline:
                 F.lit(None).cast("int").alias("flushes_out"),
                 F.lit("keep").alias("sink"),
             )
-            routed_parts.append(ph)
-
-        routed = routed_parts[0]
-        for part in routed_parts[1:]:
-            routed = routed.unionByName(part)
+            routed = routed.unionByName(ph)
         # sampled forward strips the flush-count attr (processor.go:497-503
         # sendSampledTraceData) — kept rows carry flushes = NULL; the
         # shutdown flush path (flush()) is the one that sets it
@@ -842,15 +847,12 @@ class SamplingPipeline:
             # payload is append-only while pending: new rows insert with NO
             # tombstone (older payload of the same trace must survive);
             # terminal/evicted traces tombstone all their rows
-            # (new pending payload meets the terminal keys only through
-            # evicted traces, so one broadcast key set serves both sides)
-            terminal = outcomes.select("doc_id")
             self.store.write_delta(
                 "pending_spans",
                 b,
                 prev,
-                inserts=new_pending_payload.join(F.broadcast(terminal), "doc_id", "left_anti"),
-                tombstone_keys=terminal,
+                inserts=pending_inserts,
+                tombstone_keys=outcomes.select("doc_id"),
                 schema=PENDING_SPANS_SCHEMA,
             )
 

@@ -359,6 +359,7 @@ def main():
         "cpus": out["cpus"],
         "wall_sec": pipe_res["wall_sec"],
         "rows": pipe_res.get("rows"),
+        "kept": pipe_res.get("kept"),
     }
     if calibration:
         compact["ref_task_wall_sec"] = calibration.get("ref_task_wall_sec")

@@ -1,4 +1,7 @@
+import faulthandler
+import signal
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -9,11 +12,49 @@ if str(REPO) not in sys.path:
 
 from atlassian_sampling_processor_spark.session import get_spark  # noqa: E402
 
+# Per-test wall-clock limit. The slowest test takes ~25 s on a 4-CPU VM;
+# a test that runs past the limit fails (with every thread's stack on
+# stderr) instead of holding the whole suite until its outer timeout.
+TEST_TIME_LIMIT_S = 300
+# after the limit, how long a still-stuck test gets per further interrupt
+_RETRY_S = 30
+
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="asp-tests", cores=4, shuffle_partitions=4)
     yield s
+
+
+def _cancel_spark_jobs():
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc.cancelAllJobs()
+
+
+@pytest.fixture(autouse=True)
+def _test_time_limit(request):
+    if threading.current_thread() is not threading.main_thread():
+        yield
+        return
+
+    def on_alarm(signum, frame):
+        faulthandler.dump_traceback(file=sys.stderr, all_threads=True)
+        # cancel from another thread: this one may be inside a py4j call,
+        # and the cancelled jobs release any pool thread waiting on them
+        threading.Thread(target=_cancel_spark_jobs, daemon=True).start()
+        signal.alarm(_RETRY_S)
+        raise TimeoutError(f"{request.node.nodeid} ran past {TEST_TIME_LIMIT_S} s")
+
+    previous = signal.signal(signal.SIGALRM, on_alarm)
+    signal.alarm(TEST_TIME_LIMIT_S)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)
 
 
 def hex_trace(trace_hex: str) -> tuple[int, int]:

@@ -11,13 +11,18 @@
   compaction every batch, decision spans present) stays under a job
   ceiling, and resolving a state table starts no Spark job (reads are
   schema-bound — a schemaless parquet read starts a schema-inference job).
+* Routing: one batch that produces every routed reason assigns each row
+  its exact (sink, reason, policy, flushes); the routed write's plan scans
+  the arrival slice once, and the per-trace decision plan runs no Python.
 """
 
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from atlassian_sampling_processor_spark import decision as D
+from atlassian_sampling_processor_spark import pipeline as P
 from atlassian_sampling_processor_spark.config import EngineConfig, parse_policies
 from atlassian_sampling_processor_spark.pipeline import SamplingPipeline
 from atlassian_sampling_processor_spark.state import (
@@ -30,10 +35,10 @@ from . import test_round4_epochs as r4
 from . import test_round5_pending_epochs as r5
 from .helpers import seq_table_from_spans, trace_id
 
-# the fixed-cost target of a trickle-shaped batch (it was ~65 Spark jobs
-# before schema-bound reads, one counters action and direct-to-base
-# compaction)
-JOB_CEILING = 30
+# the fixed-cost target of a trickle-shaped batch: the measured maximum
+# (it was ~65 Spark jobs before schema-bound reads, one counters action
+# and direct-to-base compaction, and 26 before one-pass routing)
+JOB_CEILING = 24
 
 
 def _pending(store, v):
@@ -183,3 +188,175 @@ def test_batch_job_count_ceiling(spark, tmp_path):
         df, n = _jobs(sc, f"asp-read-{table}", lambda: pipe.store.read(table, 2))
         assert n == 0, table
         assert df.columns
+
+
+ROUTE_POLICIES = [
+    {
+        "name": "down",
+        "type": "downgrader",
+        "emit_single_span_for_not_sampled": True,
+        "downgrader": {
+            "downgrade_to": "NotSampled",
+            "sub_policy": {"name": "s4", "type": "span_count", "span_count": {"min_spans": 4}},
+        },
+    },
+    {"name": "sc", "type": "span_count", "span_count": {"min_spans": 3}},
+    {
+        "name": "rs",
+        "type": "root_spans",
+        "root_spans": {
+            "sub_policy": {
+                "name": "prob", "type": "probabilistic",
+                "probabilistic": {"sampling_percentage": 0},
+            }
+        },
+    },
+]
+
+# traces of the routing scenario (doc_id order matters for eviction: the
+# lowest doc_id of an over-capacity epoch is evicted first)
+T = {
+    name: trace_id(7000 + i)
+    for i, name in enumerate([
+        "evp", "evs", "late_s", "late_ns", "s", "ns", "sc", "nsc", "dsr", "dsd",
+        "bad", "p1", "p2", "p3", "p4", "sec",
+    ])
+}
+
+
+def _routing_scenario(spark):
+    """Batch 0 decides late_s (3 spans → sc) and late_ns (4 spans → down)
+    and leaves sc/nsc/dsr/dsd pending (primary cap 4, full). Batch 1 is
+    the checked batch; the input's own ``flushes`` column (99, 8) is
+    ignored for decodable rows (the header slot wins) and kept for the
+    undecodable one."""
+    sid = 0
+    spans = []
+
+    def add(doc, b, n=1, **kw):
+        nonlocal sid
+        for _ in range(n):
+            sid += 1
+            spans.append(dict(doc_id=T[doc], span_id=sid, parent_span_id=7, batch_idx=b, **kw))
+
+    add("late_s", 0, 3)
+    add("late_ns", 0, 4)
+    add("sc", 0, flushes=1)
+    add("nsc", 0, flushes=2)
+    add("dsr", 0, flushes=3)
+    add("dsd", 0, flushes=4)
+    add("late_s", 1, flushes=5)
+    add("late_ns", 1, flushes=6)
+    add("s", 1, 3)
+    add("ns", 1, 3)
+    add("ns", 1, flushes=7)
+    add("sc", 1, 2)  # 3 spans → sampled by sc
+    add("nsc", 1, 3)  # 4 spans → not sampled by down
+    add("dsr", 1, is_decision_span=1, decision_value=1)
+    add("dsd", 1, is_decision_span=1, decision_value=0)
+    # epoch 1 holds 5 primaries (cap 4): evp, the lowest doc_id, is evicted
+    add("evp", 1, flushes=9)
+    for p in ("p1", "p2", "p3", "p4"):
+        add(p, 1)
+    # two lone roots (secondary, cap 1): evs is evicted
+    sid += 1
+    spans.append(dict(doc_id=T["evs"], span_id=sid, batch_idx=1, flushes=10))
+    sid += 1
+    spans.append(dict(doc_id=T["sec"], span_id=sid, batch_idx=1))
+    seqs = seq_table_from_spans(spark, spans).withColumn("flushes", F.lit(99))
+    bad = spark.createDataFrame(
+        [(T["bad"], [1, 2, 3], 3, "svc", 1, 8)], schema=seqs.schema
+    )
+    return seqs.unionByName(bad)
+
+
+def _route_pipe(spark, tmp_path):
+    return SamplingPipeline(
+        spark,
+        parse_policies(ROUTE_POLICIES),
+        EngineConfig(primary_cache_size=4, secondary_cache_size=1),
+        checkpoint_dir=str(tmp_path / "route" / "ck"),
+        output_dir=str(tmp_path / "route" / "out"),
+    )
+
+
+def test_every_routed_reason_exact_row(spark, tmp_path):
+    pipe = _route_pipe(spark, tmp_path)
+    seqs = _routing_scenario(spark)
+    pipe.run(seqs)
+    got = sorted(
+        [(r.doc_id, r.sink, r.reason, r.policy, r.flushes)
+         for r in spark.read.parquet(f"{pipe.out}/routed/batch=1").collect()],
+        key=str,
+    )
+    ev, ds = P.EVICTION_POLICY, P.DECISION_SPAN_POLICY
+    want = sorted(
+        [(T["late_s"], "keep", "late_sampled", None, None),
+         (T["late_ns"], "drop", "late_not_sampled", None, 6)]
+        + [(T["s"], "keep", "sampled", "sc", None)] * 3
+        + [(T["ns"], "drop", "not_sampled", "down", None)] * 3
+        + [(T["ns"], "drop", "not_sampled", "down", 7),
+           (T["ns"], "keep", "not_sampled_placeholder", "down", None),
+           (T["bad"], "drop", "internal_error", None, 8)]
+        + [(T["sc"], "keep", "sampled", "sc", None)] * 2
+        + [(T["sc"], "keep", "sampled_cached", "sc", None)]
+        + [(T["nsc"], "drop", "not_sampled", "down", None)] * 3
+        + [(T["nsc"], "drop", "not_sampled_cached", "down", 2),
+           (T["nsc"], "keep", "not_sampled_placeholder", "down", None),
+           (T["dsr"], "keep", "decision_span_release", ds, None),
+           (T["dsd"], "drop", "decision_span_drop", ds, 4),
+           (T["evp"], "drop", "evicted_primary", ev, 9),
+           (T["evs"], "low_priority", "evicted_secondary", ev, 10)],
+        key=str,
+    )
+    assert got == want
+    # the still-pending arrivals became pending payload, nothing else did
+    pending = {r.doc_id for r in pipe.store.read("pending_spans", 1).collect()}
+    assert pending == {T[p] for p in ("p1", "p2", "p3", "p4", "sec")}
+
+
+def _file_scans(df) -> list[str]:
+    """Root path of every file relation the optimized plan reads, once
+    per scan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRelation":
+            roots = leaf.relation().location().rootPaths()
+            out += [roots.apply(j).toUri().getPath() for j in range(roots.size())]
+    return out
+
+
+def test_routed_plan_scans_arrivals_once_and_runs_no_python(spark, tmp_path, monkeypatch):
+    """The routed write reads the arrival slice in one scan (the late,
+    evaluated, evicted-on-arrival and undecodable spans share one frame),
+    and the per-trace decision frame — probabilistic hash included — has
+    no Python evaluation node."""
+    arrivals = str(tmp_path / "arrivals")
+    _routing_scenario(spark).write.parquet(arrivals)
+    seqs = spark.read.parquet(arrivals)
+    pipe = _route_pipe(spark, tmp_path)
+    plans, checkpointed = [], []
+    write_routed = P.SamplingPipeline._write_routed
+    checkpoint = P._checkpoint
+
+    def spy_routed(self, batch, df):
+        plans.append(_file_scans(df))
+        return write_routed(self, batch, df)
+
+    def spy_checkpoint(df):
+        checkpointed.append(df)
+        return checkpoint(df)
+
+    monkeypatch.setattr(P.SamplingPipeline, "_write_routed", spy_routed)
+    monkeypatch.setattr(P, "_checkpoint", spy_checkpoint)
+    pipe.run(seqs)
+    assert len(plans) == 2
+    for scans in plans:
+        assert scans.count(arrivals) == 1, scans
+    decided = [df for df in checkpointed if "policy_decisions" in df.columns]
+    assert len(decided) == 2
+    for df in decided:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

@@ -30,6 +30,7 @@ def test_bench_pipeline_only_json_contract(tmp_path):
     got = json.loads(r.stdout.strip().splitlines()[-1])
     assert got["unit"] == "seq/sec"
     assert got["value"] > 0
-    assert got["pipeline"]["rows"] > 0
-    assert got["pipeline"]["kept"] > 0
-    assert got["pipeline"]["wall_sec"] > 0
+    # the compact stdout headline (full detail goes to BENCH_FULL.json)
+    assert got["rows"] > 0
+    assert got["kept"] > 0
+    assert got["wall_sec"] > 0

@@ -102,13 +102,22 @@ def test_source_skew_is_zipf():
 
 
 def test_expr_decoder_matches_pandas_decoder(spark, tmp_path):
-    """The Catalyst expression decoder and the Arrow pandas-UDF decoder
-    must agree bit-for-bit on every field."""
+    """The Catalyst expression decoder and the codec's numpy decode of the
+    collected tokens must agree bit-for-bit on every field."""
     p = str(tmp_path / "seq2.parquet")
     datagen.generate_sequences_parquet(p, n_traces=400, seed=11, decision_span_frac=0.05)
     raw = spark.read.parquet(p)
-    a = parse.parse_sequences(raw)
-    b = parse.parse_sequences_pandas(raw)
-    cols = [n for n, _ in parse.DECODED_FIELDS] + ["doc_id"]
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-    assert b.select(cols).exceptAll(a.select(cols)).count() == 0
+    cols = [n for n, _ in parse.DECODED_FIELDS]
+    rows = parse.parse_sequences(raw).select("tokens", *cols).collect()
+    d = codec.decode_headers(np.array([r.tokens[: codec.HEADER_LEN] for r in rows], dtype=np.int32))
+    want = {
+        "status_id": d["status_code"],
+        "is_decision_span": d["is_decision_span"] == 1,
+        "decision_value": d["decision_value"] == 1,
+    }
+    for name in cols:
+        expect = want.get(name, d.get(name))
+        if expect.dtype == np.uint64:
+            expect = expect.view(np.int64)
+        got = np.array([r[name] for r in rows], dtype=expect.dtype)
+        assert (got == expect).all(), name

@@ -6,7 +6,11 @@ process in that checkout, so both sides see the same host drift. It
 prints one JSON line: per workload and metric, each side's median, its
 IQR ÷ median, the change ratio median(B) / median(A) and the number of
 seeds on which B beat A (direction from side A's ``BENCHMARK.json``),
-plus every run's correctness verdict.
+plus every run's correctness verdict and timed batch count
+(``attempted``). A workload whose two sides timed different batch counts
+on some seed is flagged (``attempted_mismatch``): a run that fits one
+more timed batch moves ``batch_wall_p50_s`` between the cold-batch mean
+and a warm batch, which can read as a speed-up or a slowdown.
 
     python tools/ab_perfbench.py --a /path/to/parent --b . \\
         --workloads trickle,bulk --seeds 31-40 --seconds 10 [--trace 0]
@@ -109,6 +113,14 @@ def summarize(runs: dict, better: dict[str, str]) -> dict:
         per["correct"] = {
             side: [bool(r.get("correct")) for r in sides[side]] for side in ("a", "b")
         }
+        per["attempted"] = {
+            side: [r.get("attempted") for r in sides[side]] for side in ("a", "b")
+        }
+        timed_a = {r["seed"]: r.get("attempted") for r in sides["a"]}
+        per["attempted_mismatch"] = [
+            r["seed"] for r in sides["b"]
+            if r["seed"] in timed_a and r.get("attempted") != timed_a[r["seed"]]
+        ]
         out[wl] = per
     return out
 
@@ -141,11 +153,19 @@ def main() -> None:
                          if k in ("throughput_seq_s", "batch_wall_p50_s", "setup_s",
                                   "peak_rss_mb", "pipeline.jobs_per_batch")}
                 print(f"[ab] {wl} seed={seed} {side}: correct={r.get('correct')} "
-                      f"wall={r['wall_s']:.1f}s {brief}", file=sys.stderr, flush=True)
+                      f"attempted={r.get('attempted')} wall={r['wall_s']:.1f}s {brief}",
+                      file=sys.stderr, flush=True)
     if args.out:
         with open(args.out, "w") as f:
             json.dump(runs, f)
-    print(json.dumps(summarize(runs, directions(sides["a"]))))
+    summary = summarize(runs, directions(sides["a"]))
+    for wl, per in summary.items():
+        if per["attempted_mismatch"]:
+            print(f"[ab] WARNING {wl}: the sides timed different batch counts on seeds "
+                  f"{per['attempted_mismatch']} (a={per['attempted']['a']}, "
+                  f"b={per['attempted']['b']}); batch_wall_p50_s is not comparable there",
+                  file=sys.stderr, flush=True)
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":
