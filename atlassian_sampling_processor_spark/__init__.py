@@ -29,10 +29,10 @@ def _register_udf_modules_by_value() -> None:
     """
     from pyspark import cloudpickle
 
-    from . import codec, hashing, parse, streaming_stateful
+    from . import codec, hashing, parse
     from .functions import dataops, dataops2, multimodal
 
-    for mod in (codec, hashing, parse, streaming_stateful, dataops, dataops2, multimodal):
+    for mod in (codec, hashing, parse, dataops, dataops2, multimodal):
         cloudpickle.register_pickle_by_value(mod)
 
 

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 UNSPECIFIED = 0
 PENDING = 1
 SAMPLED = 2
@@ -31,3 +34,13 @@ CACHED_KINDS = (SAMPLED, NOT_SAMPLED)
 
 PRIORITY_LOW = 1
 PRIORITY_UNSPECIFIED = 2
+
+# the pending cache's two tiers (tiered_cache.go:41-49), in the order the
+# per-epoch count lists index them
+TIERS = ("primary", "secondary")
+
+
+def tier_of(priority: Column) -> Column:
+    """Pending-cache tier of a priority column: LowPriority traces live in
+    the secondary cache, every other trace in the primary."""
+    return F.when(priority == PRIORITY_LOW, F.lit("secondary")).otherwise(F.lit("primary"))

@@ -52,7 +52,6 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -100,8 +99,8 @@ def plan_decision_eviction(
 ) -> tuple[list[tuple[int, int, int]], dict[int, tuple[int, int]]]:
     """FIFO epoch-cache eviction plan — pure driver arithmetic. Shared by
     the decision caches (kinds = Sampled/NotSampled over decided_batch
-    epochs) and, since round 5, the pending cache (kinds = primary/
-    secondary tiers over last_seen_batch epochs).
+    epochs) and the pending cache (kinds = primary/secondary tiers over
+    last_seen_batch epochs).
 
     ``counts``: per-epoch per-kind live counts (list indexed like
     ``kinds``); ``wm``: per-kind watermark (epochs ≤ wm are dead for that
@@ -141,6 +140,15 @@ def plan_decision_eviction(
     return partial_req, dec_ev_age
 
 
+def live_counts(counts: dict[int, list[int]], wm: dict, kinds: tuple) -> dict:
+    """Live rows per kind: the counts of the epochs above that kind's
+    watermark (``counts`` lists are indexed like ``kinds``)."""
+    return {
+        k: sum(c[i] for e, c in counts.items() if e > wm.get(k, -1))
+        for i, k in enumerate(kinds)
+    }
+
+
 def _checkpoint(df: DataFrame) -> DataFrame:
     """Lazy local checkpoint: the first action materializes ``df`` into
     executor blocks; the returned frame's plan is a scan of those blocks,
@@ -155,23 +163,6 @@ def _release(spark: SparkSession, df: DataFrame) -> None:
     the warning."""
     rdd = df._jdf.queryExecution().logical().rdd()
     spark.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
-
-
-class _Prof:
-    """Per-phase wall clock for the batch's driver actions, printed when
-    ASP_PROFILE=1 — the tool that finds serial (Amdahl) overhead."""
-
-    def __init__(self, batch: int):
-        self.on = os.environ.get("ASP_PROFILE") == "1"
-        self.batch = batch
-        self.t = time.perf_counter()
-
-    def mark(self, phase: str) -> None:
-        if not self.on:
-            return
-        now = time.perf_counter()
-        print(f"[prof b{self.batch}] {phase}: {now - self.t:.2f}s", flush=True)
-        self.t = now
 
 
 @dataclass
@@ -257,7 +248,6 @@ class SamplingPipeline:
     # ------------------------------------------------------------- batch step
 
     def process_batch(self, raw_batch: DataFrame, b: int) -> BatchResult:
-        prof = _Prof(b)
         t_batch0 = time.perf_counter()
         prev = self.store.last_committed_batch()
         pend_state = self.store.read("pending_state", prev, PENDING_STATE_SCHEMA)
@@ -274,6 +264,9 @@ class SamplingPipeline:
             if nop_dec
             else self.store.read("decision_state", prev, DECISION_STATE_SCHEMA)
         )
+        # the epoch caches' per-epoch per-kind live counts and watermarks
+        pcounts, pwm = self.store.epoch_meta("pending_state", prev)
+        dcounts, dwm = ({}, {}) if nop_dec else self.store.epoch_meta("decision_state", prev)
 
         if "flushes" not in raw_batch.columns:
             raw_batch = raw_batch.withColumn("flushes", F.lit(None).cast("int"))
@@ -326,7 +319,6 @@ class SamplingPipeline:
             )
         )
         new_dec_from_spans = _checkpoint(new_dec_from_spans)
-        prof.mark("decision_span_ingest")
         dec_state_mid = dec_state.unionByName(new_dec_from_spans)
 
         # -- 2. early decision check (processor.go:408-430): only traces
@@ -384,48 +376,21 @@ class SamplingPipeline:
 
         # -- 5. capacity eviction per tier (lru_cache.go:94-99): rows past
         # capacity evict ⇒ NotSampled (processor.go:626-658), keep-order
-        # desc(last_seen_batch, arrival_batch, doc_id). Round 5: the
-        # pending cache is a FIFO-by-last_seen-epoch store like the
-        # decision caches — recency refreshes are delta-shaped MOVES
-        # (touched rows leave their old epoch + re-enter epoch b), so
-        # per-epoch per-tier live counts are pure driver arithmetic and
-        # eviction is a watermark advance plus at most one boundary-epoch
-        # partial read per tier. The full-capacity recency rank (and the
-        # per-batch full-set tier-count agg) of rounds 2–4 is gone; the
-        # victim key-set is identical (tested differentially against the
-        # rank plan in tests/test_round5_pending_epochs.py and against
-        # the independent simulator in tests/test_differential.py).
-        def tier_of(priority):
-            return F.when(priority == D.PRIORITY_LOW, F.lit("secondary")).otherwise(
-                F.lit("primary")
-            )
-
-        tier = tier_of(F.col("priority"))
-        prim_cap = self.engine.primary_capacity()
-        sec_cap = self.engine.secondary_cache_size
-        TIERS = ("primary", "secondary")
-        tidx = {t: i for i, t in enumerate(TIERS)}
-        caps_pend = {"primary": prim_cap, "secondary": sec_cap}
-
-        pem = self.store.read_evmeta("pending_state", prev) if prev is not None else None
-        if pem is None:
-            # first epoch-era batch: derive per-epoch per-tier counts from
-            # the resolved legacy chain once (old checkpoints resume)
-            pcounts: dict[int, list[int]] = {}
-            if prev is not None:
-                for r in (
-                    pend_state.groupBy(
-                        F.col("last_seen_batch").alias("e"), tier.alias("t")
-                    )
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                ):
-                    c = pcounts.setdefault(int(r["e"]), [0, 0])
-                    c[tidx[r["t"]]] += int(r["n"])
-            pwm: dict[str, int] = {}
-        else:
-            pcounts = {int(e): [int(c[0]), int(c[1])] for e, c in pem["counts"].items()}
-            pwm = {k: int(v) for k, v in pem["wm"].items()}
+        # desc(last_seen_batch, arrival_batch, doc_id). The pending cache
+        # is a FIFO-by-last_seen-epoch store like the decision caches —
+        # recency refreshes are delta-shaped MOVES (touched rows leave
+        # their old epoch + re-enter epoch b), so per-epoch per-tier live
+        # counts are pure driver arithmetic and eviction is a watermark
+        # advance plus at most one boundary-epoch partial read per tier.
+        # The victim key-set equals the recency rank's (tested
+        # differentially in tests/test_round5_pending_epochs.py and
+        # against the independent simulator in tests/test_differential.py).
+        tier = D.tier_of(F.col("priority"))
+        tidx = {t: i for i, t in enumerate(D.TIERS)}
+        caps_pend = {
+            "primary": self.engine.primary_capacity(),
+            "secondary": self.engine.secondary_cache_size,
+        }
 
         # delta-shaped epoch moves: touched pending rows leave their old
         # epochs (their keys also become this batch's evict keys), updated
@@ -485,10 +450,10 @@ class SamplingPipeline:
                 F.when(decisive, F.col("policy")).alias("policy"),
                 F.when(decisive, decision_from_column(self.policies)).alias("decision_from"),
                 F.when(hit, F.col("cached_last_seen_batch")).alias("old_e"),
-                F.when(hit, tier_of(F.col("cached_priority"))).alias("old_t"),
+                F.when(hit, D.tier_of(F.col("cached_priority"))).alias("old_t"),
                 F.when(
                     F.col("decision").isin(D.PENDING, D.LOW_PRIORITY),
-                    tier_of(F.col("new_priority")),
+                    D.tier_of(F.col("new_priority")),
                 ).alias("new_t"),
                 *err_flags,
             )
@@ -504,7 +469,7 @@ class SamplingPipeline:
                     F.lit("moved").alias("src"), null_i.alias("decision"),
                     null_s.alias("policy"), null_s.alias("decision_from"),
                     F.col("last_seen_batch").alias("old_e"),
-                    tier_of(F.col("priority")).alias("old_t"), null_s.alias("new_t"),
+                    D.tier_of(F.col("priority")).alias("old_t"), null_s.alias("new_t"),
                     *no_err,
                 )
             )
@@ -539,12 +504,11 @@ class SamplingPipeline:
                 err_counts[p.name] += int(r[f"_e{i}"] or 0)
         n_sampled = sum(n for (p, d, g), n in dec_counts.items() if d == D.SAMPLED)
         n_not_sampled = sum(n for (p, d, g), n in dec_counts.items() if d == D.NOT_SAMPLED)
-        prof.mark("decide+counters")
 
         old_pwm = dict(pwm)
         pre_counts = {e: list(c) for e, c in pcounts.items()}
         partial_pend, planned_ev = plan_decision_eviction(
-            pcounts, pwm, caps_pend, b, kinds=TIERS
+            pcounts, pwm, caps_pend, b, kinds=D.TIERS
         )
         n_evicted = sum(n for n, _ in planned_ev.values())
 
@@ -565,7 +529,7 @@ class SamplingPipeline:
 
         evicted_full = None
         ev_parts = []
-        for t in TIERS:
+        for t in D.TIERS:
             lo, hi = old_pwm.get(t, -1), pwm.get(t, -1)
             for e in sorted(
                 e for e in pre_counts if lo < e <= hi and pre_counts[e][tidx[t]] > 0
@@ -697,7 +661,6 @@ class SamplingPipeline:
                 F.col("flushes")
             ),
         )
-        prof.mark("eviction")
 
         # -- 7. decision state derivations (lazy — actions below)
         new_decisions = (
@@ -718,22 +681,9 @@ class SamplingPipeline:
             )
             .unionByName(new_dec_from_spans)
         )
-        # live pending totals are driver arithmetic now (plan mutated
-        # pcounts in place) — no full-set count job
-        n_pending = sum(
-            c[tidx[t]]
-            for e, c in pcounts.items()
-            for t in TIERS
-            if e > pwm.get(t, -1)
-        )
-        min_pwm = min(pwm.get(t, -1) for t in TIERS)
-        pend_meta = {
-            "wm": dict(pwm),
-            "counts": {
-                str(e): c for e, c in pcounts.items()
-                if e > min_pwm and (c[0] > 0 or c[1] > 0)
-            },
-        }
+        # live pending total: driver arithmetic (the plan mutated pcounts
+        # in place), no full-set count job
+        n_pending = sum(live_counts(pcounts, pwm, D.TIERS).values())
 
         # Decision caches (two FIFO caches over immutable first-wins
         # decisions, processor.go:142-148). LRU order ≡ insertion order
@@ -742,43 +692,21 @@ class SamplingPipeline:
         # `decided_batch` epochs — O(1) per batch, no job — plus at most
         # one O(boundary-epoch) partial eviction. The per-epoch per-kind
         # counts ride the versioned evmeta JSON; the evicted key-set is
-        # identical to the old full-chain rank (asserted in
+        # identical to a full-table keep-order rank (asserted in
         # tests/test_round4_epochs.py). The plan needs only counters the
         # driver already holds, so it runs before the output jobs.
         dec_ev_age: dict[int, tuple[int, int]] = {}
         partial_req: list[tuple[int, int, int]] = []
         victims = None
-        tot_s = tot_ns = 0
-        dec_meta = {"wm": {}, "counts": {}}
         if not nop_dec:
-            em = self.store.read_evmeta("decision_state", prev) if prev is not None else None
-            if em is None:
-                # first epoch-era batch: derive per-epoch counts from the
-                # resolved legacy chain once (old checkpoints resume)
-                counts: dict[int, list[int]] = {}
-                if prev is not None:
-                    for r in (
-                        dec_state.groupBy("decided_batch", "decision")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect()
-                    ):
-                        c = counts.setdefault(int(r["decided_batch"]), [0, 0])
-                        if r["decision"] == D.SAMPLED:
-                            c[0] += r["n"]
-                        elif r["decision"] == D.NOT_SAMPLED:
-                            c[1] += r["n"]
-                wm: dict[int, int] = {}
-            else:
-                counts = {int(e): [int(c[0]), int(c[1])] for e, c in em["counts"].items()}
-                wm = {int(k): int(v) for k, v in em["wm"].items()}
-            c = counts.setdefault(b, [0, 0])
+            c = dcounts.setdefault(b, [0, 0])
             c[0] += n_sampled + ds_counts.get(D.SAMPLED, 0)
             c[1] += n_not_sampled + n_evicted + ds_counts.get(D.NOT_SAMPLED, 0)
             caps = {
                 D.SAMPLED: self.engine.sampled_cache_size,
                 D.NOT_SAMPLED: self.engine.non_sampled_cache_size,
             }
-            partial_req, dec_ev_age = plan_decision_eviction(counts, wm, caps, b)
+            partial_req, dec_ev_age = plan_decision_eviction(dcounts, dwm, caps, b)
             if partial_req:
                 # ONE epoch per request (this batch's rows, or an older
                 # epoch's append file / base partition), never the capacity
@@ -796,21 +724,7 @@ class SamplingPipeline:
                 for part in parts[1:]:
                     victims = victims.unionByName(part)
                 victims = _checkpoint(victims)
-            # an epoch is fully dead only when BOTH kinds' watermarks have
-            # passed it (a kind absent from wm has watermark -1)
-            min_wm = min(wm.get(D.SAMPLED, -1), wm.get(D.NOT_SAMPLED, -1))
-            counts = {
-                e: cnt for e, cnt in counts.items()
-                if e > min_wm and (cnt[0] > 0 or cnt[1] > 0)
-            }
-            dec_meta = {
-                "wm": {str(k): v for k, v in wm.items()},
-                "counts": {str(e): cnt for e, cnt in counts.items()},
-            }
-            tot_s = sum(cnt[0] for e, cnt in counts.items() if e > wm.get(D.SAMPLED, -1))
-            tot_ns = sum(
-                cnt[1] for e, cnt in counts.items() if e > wm.get(D.NOT_SAMPLED, -1)
-            )
+        dec_live = live_counts(dcounts, dwm, D.CACHED_KINDS)
         n_victims = sum(k for _, _, k in partial_req)
 
         # -- 8. run the batch's independent output jobs CONCURRENTLY. The
@@ -828,19 +742,17 @@ class SamplingPipeline:
             return self._write_routed(b, routed)
 
         def job_pending_state():
-            # O(delta) epoch commit (round 5, mirrors the decision
-            # caches): epoch b = this batch's pending rows; removal keys =
-            # moved and evicted rows' (doc_id, last_seen_batch) pairs;
-            # watermarks + per-epoch counts ride the versioned evmeta — or,
-            # when compaction is due, one direct base write.
-            # The reference's in-place cache puts (lru_cache.go:63-71) cost
-            # O(1) per touch; this is the snapshot-isolation equivalent,
-            # O(1)-in-capacity on the eviction side too.
+            # O(delta) epoch commit: epoch b = this batch's pending rows;
+            # removal keys = moved and evicted rows' (doc_id,
+            # last_seen_batch) pairs; watermarks + per-epoch counts ride the
+            # versioned evmeta — or, when compaction is due, one direct
+            # base write. The reference's in-place cache puts
+            # (lru_cache.go:63-71) cost O(1) per touch; this is the
+            # snapshot-isolation equivalent, O(1)-in-capacity on the
+            # eviction side too.
             self.store.write_epoch_batch(
                 "pending_state", b, prev,
-                rows=updated,
-                removal=removal,
-                meta=pend_meta,
+                rows=updated, removal=removal, counts=pcounts, wm=pwm,
             )
 
         def job_pending_spans():
@@ -897,15 +809,14 @@ class SamplingPipeline:
             if nop_dec:
                 # nop decision cache (nop_cache.go:11-40): decisions are
                 # never remembered — late spans of a decided trace
-                # re-evaluate from scratch next batch. Truncate (legacy
-                # empty write shadows the whole history) so a checkpoint
-                # that held decisions before a reconfigure forgets them.
-                self.store.write("decision_state", b, [])
-                self.store.write_evmeta("decision_state", b, dec_meta)
+                # re-evaluate from scratch next batch. Truncating at every
+                # batch makes a checkpoint that held decisions before a
+                # reconfigure forget them.
+                self.store.truncate("decision_state", b)
             else:
                 self.store.write_epoch_batch(
                     "decision_state", b, prev,
-                    rows=new_decisions, removal=victims, meta=dec_meta,
+                    rows=new_decisions, removal=victims, counts=dcounts, wm=dwm,
                 )
 
         # pool threads inherit the caller's job group and description, so
@@ -923,7 +834,6 @@ class SamplingPipeline:
             f_pend_spans.result()
             f_dec.result()
             ev_age = f_guard.result()
-        prof.mark("concurrent_writes")
 
         res = BatchResult(
             batch_idx=b,
@@ -951,9 +861,9 @@ class SamplingPipeline:
                 err_counts=err_counts,
             ),
         )
-        prof.mark("metrics_write")
-        self.store.commit(b, meta={"dec_sampled": tot_s, "dec_not_sampled": tot_ns})
-        prof.mark("commit")
+        self.store.commit(b, meta={
+            "dec_sampled": dec_live[D.SAMPLED], "dec_not_sampled": dec_live[D.NOT_SAMPLED],
+        })
 
         for df in (decided, new_dec_from_spans, ds_moved, evicted_full, victims):
             if df is not None:
@@ -1091,10 +1001,9 @@ class SamplingPipeline:
         dec_export.write.mode("overwrite").parquet(f"{self.out}/decision_export/batch={b}")
         n_dec = dec_export.count()
 
-        for table in ("pending_state", "pending_spans", "decision_state", "metrics"):
-            self.store.write(table, b, [])
-        self.store.write_evmeta("pending_state", b, {"wm": {}, "counts": {}})
-        self.store.write_evmeta("decision_state", b, {"wm": {}, "counts": {}})
+        for table in ("pending_state", "pending_spans", "decision_state"):
+            self.store.truncate(table, b)
+        self.store.write("metrics", b, [])
         self.store.commit(b)
         return {"flushed_rows": counts["kept"], "decision_rows": n_dec}
 

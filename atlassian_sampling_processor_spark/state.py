@@ -1,38 +1,44 @@
 """Checkpointed state tables (FIXTURES.md §6) — the Spark mapping of the
 reference's four LRU caches (processor.go:53-59, DESIGN.md:110-138).
 
-Delta-shaped commits (round 3): the reference mutates its caches in
-place (internal/cache/lru_cache.go:63-71), so its per-put cost is O(1);
-a naive Spark translation rewrites every state table in full each batch
-— O(capacity) writes, hopeless at the reference-realistic 10^7–10^8
-decision-cache sizes (README.md:65-77). This store instead keeps each
-table as a merge-on-read chain:
+The reference mutates its caches in place (internal/cache/lru_cache.go:
+63-71), so its per-put cost is O(1); rewriting a Spark table every batch
+would cost O(capacity), hopeless at the reference-realistic 10^7–10^8
+decision-cache sizes (README.md:65-77). So every table has exactly one
+O(delta)-per-batch layout, and ``read`` dispatches on the table:
 
-    {ckpt}/{table}/base/v={B}/*.parquet     full snapshot (compaction)
-    {ckpt}/{table}/delta/v={b}/*.parquet    per-batch delta, b > B
+* ``pending_state``, ``decision_state`` — FIFO epoch stores (see the
+  epoch-layout comment below): per-batch epoch appends, removal keys and
+  a versioned evmeta JSON of watermarks and per-epoch counts.
+* ``pending_spans`` — a merge-on-read chain::
 
-A delta file holds the batch's *inserted rows* (``_deleted=false``) and
-*tombstoned keys* (``_deleted=true``, key column only).  ``read``
-resolves the chain lazily: union(base, deltas) with a per-part ``_v``
-version column, then an anti-ish join against the aggregated tombstone
-set (tiny — O(K·delta) keys, broadcast by AQE) keeps a row iff no
-tombstone for its key has a strictly newer version (``_v >= _tv``; an
-upsert writes tombstone+insert at the same version, so the fresh row
-survives its own tombstone).  Every ``compact_every`` batches the chain
-is folded into a new base — O(capacity) once per K batches, i.e.
-amortized O(capacity/K) — exactly the Iceberg MERGE-on-read + periodic
-rewrite shape; on a production cluster these directories ARE an Iceberg
-table and the delta write is a ``MERGE INTO`` snapshot commit.
+      {ckpt}/pending_spans/base/v={B}/*.parquet    full snapshot (compaction)
+      {ckpt}/pending_spans/delta/v={b}/*.parquet   per-batch delta, b > B
 
-Atomicity is unchanged: an atomically-renamed ``LATEST`` marker commits
-all tables of a batch at once, so a kill mid-batch leaves only
-uncommitted ``v=`` directories that the next (idempotent, deterministic)
-replay overwrites — the reference's decision-span flush/re-ingest
-resumability story (DESIGN.md:148-167) done with snapshots.
+  A delta holds the batch's *inserted rows* (``_deleted=false``) and
+  *tombstoned keys* (``_deleted=true``, key column only). ``read``
+  resolves the chain lazily: union(base, deltas) with a per-part ``_v``
+  version column, then an anti-ish join against the aggregated tombstone
+  set (tiny — O(K·delta) keys, broadcast) keeps a row iff no tombstone
+  for its key has a strictly newer version (``_v >= _tv``; an upsert
+  writes tombstone+insert at the same version, so the fresh row survives
+  its own tombstone). Every ``compact_every`` batches the chain is folded
+  into a new base — amortized O(capacity/K), the Iceberg MERGE-on-read +
+  periodic rewrite shape; on a production cluster these directories ARE
+  an Iceberg table and the delta write is a ``MERGE INTO`` commit.
+* ``metrics`` — a per-batch log ``{ckpt}/metrics/v={b}/``, written on
+  the driver with pyarrow.
 
-Legacy layout ``{table}/v={b}`` (round-1/2 checkpoints, the metrics log
-table, flush()'s empty rewrites) reads as a base of the chain, so old
-checkpoints resume and per-batch metrics stay per-batch.
+A base at version ``B`` shadows every delta, epoch and evict directory
+at or below ``B``, so ``truncate`` (an empty base, plus an empty evmeta
+on an epoch table) empties a table as of one version: flush() and the
+nop decision cache use it.
+
+Atomicity: an atomically-renamed ``LATEST`` marker commits all tables of
+a batch at once, so a kill mid-batch leaves only uncommitted ``v=``
+directories that the next (idempotent, deterministic) replay overwrites —
+the reference's decision-span flush/re-ingest resumability story
+(DESIGN.md:148-167) done with snapshots.
 
 Every read is schema-bound (``spark.read.schema(S).parquet``): a
 schemaless parquet read starts a Spark job to infer the footer schema,
@@ -49,6 +55,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import decision as D
 
 PENDING_STATE_SCHEMA = T.StructType(
     [
@@ -95,6 +103,7 @@ TABLE_SCHEMAS = {
     "metrics": METRICS_SCHEMA,
 }
 TABLES = tuple(TABLE_SCHEMAS)
+EPOCH_TABLES = ("pending_state", "decision_state")
 
 _DEL = "_deleted"
 _V = "_v"
@@ -153,14 +162,14 @@ def empty_frame(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema=schema).limit(0)
 
 
-def _list_versions(d: str) -> dict[int, str]:
-    """``{v: path}`` for ``v=N`` subdirectories of ``d`` (missing → {})."""
+def _list_versions(d: str, suffix: str = "") -> dict[int, str]:
+    """``{v: path}`` for the ``v=N{suffix}`` entries of ``d`` (missing → {})."""
     out: dict[int, str] = {}
     try:
         for name in os.listdir(d):
-            if name.startswith("v="):
+            if name.startswith("v=") and name.endswith(suffix):
                 try:
-                    out[int(name[2:])] = os.path.join(d, name)
+                    out[int(name[2:len(name) - len(suffix)])] = os.path.join(d, name)
                 except ValueError:
                     pass
     except FileNotFoundError:
@@ -172,8 +181,8 @@ class StateStore:
     def __init__(self, spark: SparkSession, ckpt_dir: str, compact_every: int = 8):
         self.spark = spark
         self.dir = ckpt_dir
-        # chain length that triggers folding deltas into a new base;
-        # <=1 degenerates to a full rewrite per batch (the round-2 shape)
+        # chain length that triggers folding deltas (or epochs) into a
+        # new base; <=1 writes a base every batch
         self.compact_every = max(1, compact_every)
         os.makedirs(ckpt_dir, exist_ok=True)
 
@@ -204,10 +213,10 @@ class StateStore:
             json.dump({"batch": batch, "meta": meta or {}}, f)
         os.replace(tmp, self._marker())  # atomic
 
-    # -- chain layout -------------------------------------------------------
+    # -- layout -------------------------------------------------------------
 
-    def _path(self, table: str, batch: int) -> str:
-        """Legacy full-table path (metrics log, flush, old checkpoints)."""
+    def _log_path(self, table: str, batch: int) -> str:
+        """One batch of a per-batch log table (metrics)."""
         return os.path.join(self.dir, table, f"v={batch}")
 
     def _base_path(self, table: str, batch: int) -> str:
@@ -216,44 +225,46 @@ class StateStore:
     def _delta_path(self, table: str, batch: int) -> str:
         return os.path.join(self.dir, table, "delta", f"v={batch}")
 
-    def _chain(self, table: str, batch: int) -> tuple[tuple[int, str] | None, list[tuple[int, str]]]:
-        """(base, deltas) visible at committed version ``batch``.
+    def _floor(self, table: str, batch: int) -> int:
+        """Newest base version ≤ ``batch`` (-1 if none)."""
+        bases = _list_versions(os.path.join(self.dir, table, "base"))
+        return max((v for v in bases if v <= batch), default=-1)
 
-        Bases are compaction snapshots plus legacy full writes; deltas are
-        the delta versions in (base, batch]. Directories with v > batch
-        (crashed, uncommitted writes) are invisible — replay overwrites
-        them deterministically.
-        """
-        tdir = os.path.join(self.dir, table)
-        bases = dict(_list_versions(tdir))  # legacy full tables
-        bases.update(_list_versions(os.path.join(tdir, "base")))  # compactions win ties
-        bv = max((v for v in bases if v <= batch), default=None)
-        base = (bv, bases[bv]) if bv is not None else None
-        deltas = sorted(
+    def _above(self, table: str, sub: str, floor: int, batch: int) -> list[tuple[int, str]]:
+        """``(v, path)`` of ``{table}/{sub}/v=`` dirs with floor < v ≤ batch.
+        Directories with v > batch (crashed, uncommitted writes) are
+        invisible — replay overwrites them deterministically."""
+        return sorted(
             (v, p)
-            for v, p in _list_versions(os.path.join(tdir, "delta")).items()
-            if v <= batch and (bv is None or v > bv)
+            for v, p in _list_versions(os.path.join(self.dir, table, sub)).items()
+            if floor < v <= batch
         )
-        return base, deltas
+
+    def _chain(self, table: str, batch: int) -> tuple[tuple[int, str] | None, list[tuple[int, str]]]:
+        """(base, deltas) visible at committed version ``batch``: the
+        newest base ≤ batch and the delta versions in (base, batch]."""
+        bv = self._floor(table, batch)
+        base = (bv, self._base_path(table, bv)) if bv >= 0 else None
+        return base, self._above(table, "delta", bv, batch)
 
     # -- write --------------------------------------------------------------
 
-    def write(self, table: str, batch: int, data: DataFrame | list[tuple]) -> None:
-        """Full (legacy/base-equivalent) write — O(rows). Used for the
-        per-batch metrics log and flush()'s state reset; state tables go
-        through write_delta / write_epoch_batch. ``data`` is a DataFrame, or a
-        list of row tuples already on the driver, which are written with
-        pyarrow and start no Spark job."""
-        shutil.rmtree(self._delta_path(table, batch), ignore_errors=True)
-        # a crashed compaction may have left an uncommitted base at this
-        # version; bases win ties in _chain ("compactions win ties"), so a
-        # stale one would shadow this legacy write after commit — every
-        # write path rmtrees its sibling layouts at the same version
-        shutil.rmtree(self._base_path(table, batch), ignore_errors=True)
-        if isinstance(data, DataFrame):
-            data.write.mode("overwrite").parquet(self._path(table, batch))
-        else:
-            _write_arrow(self._path(table, batch), data, TABLE_SCHEMAS[table])
+    def write(self, table: str, batch: int, rows: list[tuple]) -> None:
+        """One batch of a per-batch log table (metrics): ``rows`` are row
+        tuples already on the driver, written with pyarrow — no Spark
+        job."""
+        _write_arrow(self._log_path(table, batch), rows, TABLE_SCHEMAS[table])
+
+    def truncate(self, table: str, batch: int) -> None:
+        """Empty ``table`` as of ``batch``: an empty base at ``batch``
+        shadows every older version (and replaces a ghost base a crashed
+        compaction left at this version); an epoch table also gets an
+        empty evmeta. Reads of an empty base directory resolve to empty."""
+        bp = self._base_path(table, batch)
+        shutil.rmtree(bp, ignore_errors=True)
+        os.makedirs(bp)
+        if table in EPOCH_TABLES:
+            self.write_evmeta(table, batch, {"wm": {}, "counts": {}})
 
     def write_delta(
         self,
@@ -282,7 +293,6 @@ class StateStore:
                 cur = cur.join(F.broadcast(tombstone_keys.select(key)), key, "left_anti")
             live = cur.unionByName(ins)
             shutil.rmtree(self._delta_path(table, batch), ignore_errors=True)
-            shutil.rmtree(self._path(table, batch), ignore_errors=True)
             live.write.mode("overwrite").parquet(self._base_path(table, batch))
             return
         delta = ins.withColumn(_DEL, F.lit(False))
@@ -292,20 +302,18 @@ class StateStore:
         # a crashed compaction may have left an uncommitted base at this
         # version — remove it so chain discovery can't resurrect it
         shutil.rmtree(self._base_path(table, batch), ignore_errors=True)
-        shutil.rmtree(self._path(table, batch), ignore_errors=True)
         # deltas are small by design — don't scatter them over the full
         # shuffle-partition count (a K-batch chain otherwise accumulates
         # K × partitions tiny files, and reads pay per-file scan setup:
         # measured ~3 s of fixed resolution cost at 6 × 32 files)
         delta.coalesce(8).write.mode("overwrite").parquet(self._delta_path(table, batch))
 
-    # -- epoch layout (FIFO decision cache, round 4; pending cache round 5) --
+    # -- epoch layout (the FIFO pending and decision caches) -----------------
     #
     # Decisions are immutable and never recency-refreshed (first-wins,
     # processor.go:436-480), so the reference's decision-cache LRU order
     # IS insertion order — eviction can be FIFO by `decided_batch` epoch.
-    # Instead of ranking the full O(capacity) chain on overflow
-    # (the round-3 shape), the store keeps an epoch table as:
+    # An epoch table is stored as:
     #
     #   {table}/epoch/v={b}/        batch b's new rows (O(delta) append)
     #   {table}/evict/v={b}/        per-row removal keys written at batch b
@@ -319,9 +327,8 @@ class StateStore:
     # no evict key. Whole-epoch eviction is a pure driver-side watermark
     # advance (O(1), no job); only a partial boundary-epoch eviction runs a
     # job, and it reads ONE epoch (partition-pruned), never the capacity.
-    # The legacy chain layout remains readable underneath (old checkpoints,
-    # flush()'s truncating legacy write) — read() unions epochs above the
-    # newest full layout exactly like deltas.
+    # The base holds only rows live at its version; epochs and evict keys
+    # at or below it are shadowed.
     #
     # Two tables use it, each with its own (kind, epoch) keying:
     #   decision_state: kind = decision (Sampled/NotSampled),
@@ -333,23 +340,15 @@ class StateStore:
     #                   append in the new), so the FIFO watermark trick
     #                   still applies: LRU order is epoch order, with
     #                   (arrival_batch, doc_id) ranking only inside the
-    #                   boundary epoch (the full-capacity recency rank the
-    #                   round-4 pipeline ran per overflow batch is gone).
+    #                   boundary epoch.
 
     def _epoch_cfg(self, table: str):
         """(kind Column expr, epoch column name, kind values) for the
         epoch-store tables. The wm filter/prune and the evict-key join are
         expressed through these, so the machinery is shared."""
         if table == "pending_state":
-            from .decision import PRIORITY_LOW
-
-            kind = F.when(
-                F.col("priority") == F.lit(PRIORITY_LOW), F.lit("secondary")
-            ).otherwise(F.lit("primary"))
-            return kind, "last_seen_batch", ("primary", "secondary")
-        from .decision import CACHED_KINDS
-
-        return F.col("decision"), "decided_batch", tuple(CACHED_KINDS)
+            return D.tier_of(F.col("priority")), "last_seen_batch", D.TIERS
+        return F.col("decision"), "decided_batch", D.CACHED_KINDS
 
     def _epoch_path(self, table: str, batch: int) -> str:
         return os.path.join(self.dir, table, "epoch", f"v={batch}")
@@ -368,10 +367,9 @@ class StateStore:
 
     def write_epoch(self, table: str, batch: int, df: DataFrame) -> None:
         """O(delta) append of batch ``batch``'s new rows as one epoch.
-        Clears sibling layouts at the same version (torn-write replay)."""
-        shutil.rmtree(self._path(table, batch), ignore_errors=True)
+        Clears a torn base, evict set and evmeta at the same version
+        (torn-write replay)."""
         shutil.rmtree(self._base_path(table, batch), ignore_errors=True)
-        shutil.rmtree(self._delta_path(table, batch), ignore_errors=True)
         shutil.rmtree(self._evict_path(table, batch), ignore_errors=True)
         try:
             os.remove(self._evmeta_path(table, batch))
@@ -399,19 +397,7 @@ class StateStore:
         os.replace(tmp, self._evmeta_path(table, batch))
 
     def _list_evmeta_versions(self, table: str) -> dict[int, str]:
-        """``{v: path}`` for the ``v=N.json`` evmeta files of ``table``."""
-        d = os.path.join(self.dir, table, "evmeta")
-        out: dict[int, str] = {}
-        try:
-            for name in os.listdir(d):
-                if name.startswith("v=") and name.endswith(".json"):
-                    try:
-                        out[int(name[2:-5])] = os.path.join(d, name)
-                    except ValueError:
-                        pass
-        except FileNotFoundError:
-            pass
-        return out
+        return _list_versions(os.path.join(self.dir, table, "evmeta"), ".json")
 
     def read_evmeta(self, table: str, batch: int) -> dict | None:
         """Newest evmeta at version ≤ batch (versioned like the data dirs,
@@ -423,25 +409,38 @@ class StateStore:
         with open(versions[best]) as f:
             return json.load(f)
 
+    def epoch_meta(self, table: str, prev: int | None) -> tuple[dict[int, list[int]], dict]:
+        """``(counts, wm)`` of an epoch table as of committed version
+        ``prev``: per-epoch per-kind live counts and per-kind watermarks,
+        keyed by native kind values — the driver-side state its eviction
+        plan runs on. Empty before the first commit. A committed version
+        without evmeta raises: re-deriving the counts from the rows would
+        hide the inconsistency."""
+        if prev is None:
+            return {}, {}
+        em = self.read_evmeta(table, prev)
+        if em is None:
+            raise RuntimeError(f"{table}: committed version {prev} has no evmeta")
+        counts = {int(e): [int(n) for n in c] for e, c in em["counts"].items()}
+        return counts, {_kind_key(str(k)): int(v) for k, v in em["wm"].items()}
+
+    def _evmeta(self, table: str, counts: dict[int, list[int]], wm: dict) -> dict:
+        """The evmeta JSON of ``(counts, wm)``. An epoch is dropped once
+        every kind's watermark has passed it (a kind absent from ``wm`` has
+        watermark -1) or it holds no rows."""
+        _, _, kinds = self._epoch_cfg(table)
+        dead = min(wm.get(k, -1) for k in kinds)
+        return {
+            "wm": {str(k): int(v) for k, v in wm.items()},
+            "counts": {str(e): c for e, c in counts.items() if e > dead and any(c)},
+        }
+
     def _epoch_parts(self, table: str, batch: int) -> tuple[int, list[tuple[int, str]], list[tuple[int, str]]]:
-        """(floor_version, epoch dirs, evict dirs) visible at ``batch``.
-        The floor is the newest full layout (legacy or base) ≤ batch;
-        epochs/evicts at or below it are shadowed (compacted/truncated)."""
-        tdir = os.path.join(self.dir, table)
-        fulls = dict(_list_versions(tdir))
-        fulls.update(_list_versions(os.path.join(tdir, "base")))
-        floor = max((v for v in fulls if v <= batch), default=-1)
-        epochs = sorted(
-            (v, p)
-            for v, p in _list_versions(os.path.join(tdir, "epoch")).items()
-            if floor < v <= batch
-        )
-        evicts = sorted(
-            (v, p)
-            for v, p in _list_versions(os.path.join(tdir, "evict")).items()
-            if floor < v <= batch
-        )
-        return floor, epochs, evicts
+        """(floor version, epoch dirs, evict dirs) visible at ``batch``.
+        The floor is the newest base ≤ batch (-1 if none); epochs and
+        evicts at or below it are shadowed (compacted/truncated)."""
+        floor = self._floor(table, batch)
+        return floor, self._above(table, "epoch", floor, batch), self._above(table, "evict", floor, batch)
 
     def _scan(self, paths: str | list[str], schema) -> DataFrame:
         """Schema-bound parquet scan — starts no schema-inference job."""
@@ -478,24 +477,21 @@ class StateStore:
             "left_anti",
         )
 
-    def _read_epochal(
-        self,
-        table: str,
-        batch: int,
-        floor_df: DataFrame | None,
-        schema,
-        epochs: list[tuple[int, str]],
-        evicts: list[tuple[int, str]],
-    ) -> DataFrame:
-        """Union the legacy-resolved floor with epoch appends, then apply
-        the per-kind watermark filter and the partial-evict anti-join."""
-        parts = [] if floor_df is None else [floor_df]
+    def _read_epochal(self, table: str, batch: int, schema) -> DataFrame:
+        """Union the floor base with the epoch appends above it, then
+        apply the per-kind watermark filter and the partial-evict
+        anti-join. A base alone is read as is: it holds only rows live at
+        its version."""
+        floor, epochs, evicts = self._epoch_parts(table, batch)
+        parts = [self._scan(self._base_path(table, floor), schema)] if floor >= 0 else []
         parts += [self._scan(p, schema) for _, p in epochs]
         if not parts:
             return empty_frame(self.spark, schema)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        if not (epochs or evicts):
+            return df
         em = self.read_evmeta(table, batch) or {}
         df = self._wm_filter(table, df, em.get("wm") or {})
         if evicts:
@@ -507,26 +503,25 @@ class StateStore:
         """Live rows of ONE epoch as of ``batch`` — the partial-eviction
         read path. Touches only that epoch's append file (or its base
         partition directory), never the capacity; prior partial-evict
-        keys for the epoch are anti-joined (broadcast, tiny)."""
+        keys for the epoch are anti-joined (broadcast, tiny). Empty when
+        the epoch holds no rows."""
         _, epoch_col, _ = self._epoch_cfg(table)
         floor, epochs, evicts = self._epoch_parts(table, batch)
         paths = [p for v, p in epochs if v == epoch]
-        df = None
+        bdir = os.path.join(self._base_path(table, floor), f"{epoch_col}={epoch}")
         if paths:
             df = self._scan(paths[0], schema)
-        elif floor >= 0:
-            bdir = os.path.join(self._base_path(table, floor), f"{epoch_col}={epoch}")
-            if os.path.isdir(bdir):
-                # the partition directory holds no epoch column of its own
-                data = T.StructType([f for f in _struct(schema).fields if f.name != epoch_col])
-                df = (
-                    self.spark.read.schema(data)
-                    .parquet(bdir)
-                    .withColumn(epoch_col, F.lit(epoch).cast("int"))
-                    .select(*_field_names(schema))
-                )
-        if df is None:  # legacy chain floor — resolve and filter (rare)
-            return self.read(table, batch, schema).filter(F.col(epoch_col) == F.lit(epoch))
+        elif floor >= 0 and os.path.isdir(bdir):
+            # the partition directory holds no epoch column of its own
+            data = T.StructType([f for f in _struct(schema).fields if f.name != epoch_col])
+            df = (
+                self.spark.read.schema(data)
+                .parquet(bdir)
+                .withColumn(epoch_col, F.lit(epoch).cast("int"))
+                .select(*_field_names(schema))
+            )
+        else:
+            return empty_frame(self.spark, schema)
         if evicts:
             ev = self._scan([p for _, p in evicts], self._evict_schema(table))
             df = self._minus_keys(table, df, ev.filter(F.col(epoch_col) == F.lit(epoch)))
@@ -539,8 +534,6 @@ class StateStore:
         future watermark filters cheap. The base shadows every epoch and
         evict directory at or below ``batch``."""
         _, epoch_col, _ = self._epoch_cfg(table)
-        shutil.rmtree(self._path(table, batch), ignore_errors=True)
-        shutil.rmtree(self._delta_path(table, batch), ignore_errors=True)
         bp = self._base_path(table, batch)
         # coalesce, not repartition: the same 8 write tasks without a
         # shuffle stage (an epoch may span up to 8 files)
@@ -558,7 +551,7 @@ class StateStore:
     def n_epochs_since_floor(self, table: str, batch: int | None) -> int:
         if batch is None:
             return 0
-        floor, epochs, _ = self._epoch_parts(table, batch)
+        _, epochs, _ = self._epoch_parts(table, batch)
         return len(epochs)
 
     def write_epoch_batch(
@@ -568,18 +561,21 @@ class StateStore:
         prev: int | None,
         rows: DataFrame,
         removal: DataFrame | None,
-        meta: dict,
+        counts: dict[int, list[int]],
+        wm: dict,
     ) -> None:
         """Commit batch ``batch`` of an epoch-store table: ``rows`` are the
         batch's new epoch rows, ``removal`` the ``(doc_id, <epoch col>)``
-        keys that die at this batch, ``meta`` the evmeta (watermarks and
-        per-epoch counts) as of this batch.
+        keys that die at this batch, ``counts`` and ``wm`` the per-epoch
+        per-kind live counts and per-kind watermarks as of this batch
+        (stored as its evmeta).
 
         Normally an O(delta) append of ``epoch/v=batch`` and
         ``evict/v=batch``. When compaction is due, the new base is written
         directly from the lazily resolved live frame — prev's live rows ∪
         ``rows``, minus the new watermarks and ``removal`` — instead of
         appending, reading the appends back and rewriting them."""
+        meta = self._evmeta(table, counts, wm)
         if self.n_epochs_since_floor(table, prev) + 1 < self.compact_every:
             self.write_epoch(table, batch, rows)
             if removal is not None:
@@ -588,7 +584,7 @@ class StateStore:
             return
         schema = TABLE_SCHEMAS[table]
         live = self.read(table, prev, schema).unionByName(_conform(rows, schema))
-        live = self._wm_filter(table, live, meta.get("wm") or {})
+        live = self._wm_filter(table, live, wm)
         if removal is not None:
             live = self._minus_keys(table, live, removal)
         self.write_evmeta(table, batch, meta)
@@ -599,29 +595,22 @@ class StateStore:
     def read(self, table: str, batch: int | None, schema=None) -> DataFrame:
         """Live rows of ``table`` as of committed version ``batch``
         (time-travel: any committed version resolves, not just the
-        latest); empty when ``batch`` is None or nothing was written.
-        ``schema`` defaults to the table's own."""
+        latest); for the metrics log, batch ``batch``'s rows. Empty when
+        ``batch`` is None or nothing was written. ``schema`` defaults to
+        the table's own."""
         schema = TABLE_SCHEMAS[table] if schema is None else schema
         if batch is None:
             return empty_frame(self.spark, schema)
-        _, epochs, evicts = self._epoch_parts(table, batch)
-        epochal = bool(epochs or evicts)
-        p = self._path(table, batch)
-        if os.path.isdir(p) and not epochal:  # exact legacy — fast path
-            return self._scan(p, schema)
-        bp = self._base_path(table, batch)
-        if os.path.isdir(bp) and not epochal:
-            return self._scan(bp, schema)
+        if table in EPOCH_TABLES:
+            return self._read_epochal(table, batch, schema)
+        if table == "metrics":
+            p = self._log_path(table, batch)
+            return self._scan(p, schema) if os.path.isdir(p) else empty_frame(self.spark, schema)
         base, deltas = self._chain(table, batch)
-        floor_df = None
-        if base is not None and not deltas:  # post-compaction: plain scan
-            floor_df = self._scan(base[1], schema)
-        elif base is not None or deltas:
-            floor_df = self._resolve(base, deltas, schema, key="doc_id")
-        if epochal:
-            return self._read_epochal(table, batch, floor_df, schema, epochs, evicts)
-        if floor_df is not None:
-            return floor_df
+        if deltas:
+            return self._resolve(base, deltas, schema, key="doc_id")
+        if base is not None:  # post-compaction: plain scan
+            return self._scan(base[1], schema)
         return empty_frame(self.spark, schema)
 
     def _resolve(
@@ -646,9 +635,7 @@ class StateStore:
                 .withColumn(_DEL, F.lit(False))
             )
         for v, p in deltas:
-            # a delta dir without the flag column (legacy) reads as inserts
-            df = self._scan(p, delta_schema).withColumn(_DEL, F.coalesce(_DEL, F.lit(False)))
-            parts.append(df.withColumn(_V, F.lit(v)))
+            parts.append(self._scan(p, delta_schema).withColumn(_V, F.lit(v)))
         data = parts[0]
         for p in parts[1:]:
             data = data.unionByName(p)
@@ -677,19 +664,17 @@ class StateStore:
         base at or before ``committed``. Optional — time-travel reads of
         older versions stop working for vacuumed segments. Never touches
         versions > ``committed``."""
-        base, _ = self._chain(table, committed)
-        if base is None:
+        bv = self._floor(table, committed)
+        if bv < 0:
             return
-        bv, _ = base
         tdir = os.path.join(self.dir, table)
         for sub in ("delta", "epoch", "evict"):
             for v, p in list(_list_versions(os.path.join(tdir, sub)).items()):
                 if v <= bv:
                     shutil.rmtree(p, ignore_errors=True)
-        for sub in ("", "base"):
-            for v, p in list(_list_versions(os.path.join(tdir, sub) if sub else tdir).items()):
-                if v < bv:
-                    shutil.rmtree(p, ignore_errors=True)
+        for v, p in list(_list_versions(os.path.join(tdir, "base")).items()):
+            if v < bv:
+                shutil.rmtree(p, ignore_errors=True)
         # evmeta files strictly below the base can go — the base bakes the
         # watermark as of its version, and every epoch batch writes a fresh
         # evmeta, so reads above bv still find the newest one

@@ -20,6 +20,12 @@ TEST_TIME_LIMIT_S = 300
 _RETRY_S = 30
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "differential: engine vs the independent reference simulator"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="asp-tests", cores=4, shuffle_partitions=4)

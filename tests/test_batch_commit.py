@@ -6,7 +6,8 @@
 * The drift guard fires before the commit marker moves: a corrupted
   committed evmeta count makes the stored epochs yield fewer victims than
   the driver-side plan — for the pending cache and for the decision
-  caches' partial evictions alike.
+  caches' partial evictions alike. A committed version whose evmeta is
+  gone fails the next batch the same way, before any write.
 * Job-count regression: a tiny trickle-shaped batch (evicting caches,
   compaction every batch, decision spans present) stays under a job
   ceiling, and resolving a state table starts no Spark job (reads are
@@ -17,6 +18,8 @@
 """
 
 import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,6 +135,24 @@ def test_decision_drift_guard_raises_before_commit(spark, tmp_path):
     assert pipe.store.last_committed_batch() == 2
 
 
+@pytest.mark.parametrize("table", ["pending_state", "decision_state"])
+def test_missing_evmeta_fails_loudly(spark, tmp_path, table):
+    """No evmeta at the committed version: the batch raises instead of
+    re-deriving the counts, and writes nothing at the next version."""
+    eng_spans, _ = r5._scenario(n_batches=3)
+    pipe = r5._mk(spark, tmp_path, "noevmeta")
+    pipe.run(seq_table_from_spans(spark, eng_spans), n_batches=2)
+    shutil.rmtree(os.path.dirname(pipe.store._evmeta_path(table, 1)))
+    with pytest.raises(RuntimeError, match=f"{table}: committed version 1 has no evmeta"):
+        pipe.process_batch(_batch(spark, eng_spans, 2), 2)
+    assert pipe.store.last_committed_batch() == 1
+    for t in ("pending_state", "pending_spans", "decision_state"):
+        for layout in ("base", "delta", "epoch", "evict"):
+            assert not os.path.exists(os.path.join(pipe.store.dir, t, layout, "v=2"))
+    assert not os.path.exists(os.path.join(pipe.store.dir, "metrics", "v=2"))
+    assert not os.path.exists(os.path.join(pipe.out, "routed", "batch=2"))
+
+
 def _r5_prim(batch, i):
     return trace_id(8000 + batch * 20 + i)
 
@@ -182,7 +203,7 @@ def test_batch_job_count_ceiling(spark, tmp_path):
     assert res.evicted_traces > 0  # the shape really evicts
     assert max(counts) <= JOB_CEILING, counts
 
-    # resolving any state table (epoch base, legacy log, merge chain)
+    # resolving any state table (epoch base, metrics log, merge chain)
     # plans against the known schema: zero jobs
     for table in TABLES:
         df, n = _jobs(sc, f"asp-read-{table}", lambda: pipe.store.read(table, 2))

@@ -2,8 +2,8 @@
 
 * torn-write crash resume — a kill BETWEEN a state write and the commit
   marker (the case that bites operators; round-1's test killed between
-  batches) must replay idempotently: uncommitted delta/base directories
-  are invisible to chain discovery and get overwritten by the replay
+  batches) must replay idempotently: uncommitted epoch/base directories
+  are invisible to the store's reads and get overwritten by the replay
   (state.py commit protocol; reference resumability DESIGN.md:148-167).
 * delta-chain equivalence — identical sinks and final state at
   state_compact_every = 1 (full rewrite per batch, the round-2 shape),
@@ -91,7 +91,7 @@ def _run_all(pipe, spark, spans):
 
 def test_torn_write_resume(spark, tmp_path):
     """Crash AFTER batch-1 state writes but BEFORE the commit marker:
-    replay must overwrite the torn (uncommitted) delta AND a torn
+    replay must overwrite the torn (uncommitted) epoch AND a torn
     compaction base, and converge to the clean run's sinks + state."""
     spans = _spans_multi_batch()
     clean = _mk(spark, tmp_path, "clean", primary_cache_size=6)
@@ -101,14 +101,11 @@ def test_torn_write_resume(spark, tmp_path):
     crash.run(seq_table_from_spans(spark, spans), n_batches=1)  # commit batch 0 only
     store = crash.store
     # simulate the torn batch-1 writes a real crash leaves behind:
-    # (a) an uncommitted pending_state delta with garbage rows
+    # (a) an uncommitted pending_state epoch with garbage rows
     garbage = spark.createDataFrame(
-        [("f" * 32, 0, 0, 99, 0, 0, 0, 0, 0, None, "torn")], schema=PENDING_STATE_SCHEMA
+        [("f" * 32, 0, 0, 99, 0, 0, 1, 1, 0, None, "torn")], schema=PENDING_STATE_SCHEMA
     )
-    store.write_delta(
-        "pending_state", 1, 0, inserts=garbage, tombstone_keys=None,
-        schema=PENDING_STATE_SCHEMA,
-    )
+    store.write_epoch("pending_state", 1, garbage)
     # (b) a torn COMPACTION: an uncommitted base snapshot for decision_state
     bogus = spark.createDataFrame(
         [("e" * 32, D.SAMPLED, "ghost", 1)], schema=DECISION_STATE_SCHEMA

@@ -14,9 +14,8 @@ assertion the round-3 verdict asked for.
 Covers: whole-epoch watermark eviction, boundary-epoch partial eviction,
 re-decision after eviction (an old evict key must not kill the fresh
 epoch row — keys pair (doc_id, decided_batch)), time-travel reads at
-every committed version, mid-run compaction, legacy-chain (round-3
-checkpoint) resume into the epoch era, and the nop-cache truncation the
-round-3 ADVICE flagged.
+every committed version, mid-run compaction, and the nop-cache
+truncation the round-3 ADVICE flagged.
 """
 
 import pytest
@@ -169,55 +168,6 @@ def test_epoch_eviction_differential(spark, tmp_path, compact_every):
         and not r.labels.get("decision_from")  # skip dup-labelled rows
     )
     assert n_inserted - n_evicted == final.count()
-
-
-def test_legacy_chain_resume_into_epoch_era(spark, tmp_path):
-    """A round-3 checkpoint (legacy delta-chain decision_state, no
-    evmeta) must resume: per-epoch counts are derived from the chain
-    once, then eviction proceeds FIFO over old + new epochs."""
-    pipe = _mk(spark, tmp_path, "legacy")
-    store = pipe.store
-    # seed: a legacy chain holding 4 sampled decisions across epochs 0-1
-    old = spark.createDataFrame(
-        [
-            (trace_id(7000), D.SAMPLED, "err", 0),
-            (trace_id(7001), D.SAMPLED, "err", 0),
-            (trace_id(7002), D.SAMPLED, "err", 1),
-            (trace_id(7003), D.NOT_SAMPLED, "down", 1),
-        ],
-        schema=DECISION_STATE_SCHEMA,
-    )
-    store.write_delta(
-        "decision_state", 1, None, inserts=old, tombstone_keys=None,
-        schema=DECISION_STATE_SCHEMA,
-    )
-    from atlassian_sampling_processor_spark.pipeline import PENDING_SPANS_SCHEMA, _empty
-    from atlassian_sampling_processor_spark.state import PENDING_STATE_SCHEMA
-
-    store.write("pending_state", 1, _empty(spark, PENDING_STATE_SCHEMA))
-    store.write("pending_spans", 1, _empty(spark, PENDING_SPANS_SCHEMA))
-    store.commit(1)
-
-    # batch 2: 4 new sampled (errors) → total sampled 7 > cap 5: the two
-    # epoch-0 legacy decisions must fall off (oldest epoch first)
-    spans = [
-        dict(doc_id=trace_id(7100 + i), span_id=100 + i, status=2, batch_idx=2)
-        for i in range(4)
-    ]
-    # late span for a legacy decision that survives (epoch 1)
-    spans.append(dict(doc_id=trace_id(7002), span_id=990, status=0, batch_idx=2))
-    pipe.run(seq_table_from_spans(spark, spans))
-
-    live = {
-        r.doc_id: r.decision
-        for r in store.read("decision_state", 2, DECISION_STATE_SCHEMA).collect()
-    }
-    assert trace_id(7000) not in live and trace_id(7001) not in live  # epoch 0 gone
-    assert live.get(trace_id(7002)) == D.SAMPLED  # epoch 1 survives
-    assert all(live.get(trace_id(7100 + i)) == D.SAMPLED for i in range(4))
-    # the late span of the surviving decision was served from cache
-    keep = pipe.read_sink("keep").filter(F.col("doc_id") == trace_id(7002)).collect()
-    assert [r.reason for r in keep] == ["late_sampled"]
 
 
 def test_nop_decision_cache_truncates_checkpoint(spark, tmp_path):

@@ -1,9 +1,8 @@
 """Round-4 fix tests (round-3 ADVICE items):
 
-* legacy write() must remove a stale uncommitted base at the same
-  version — bases win ties in chain discovery, so a crashed compaction
-  followed by a flush()-style legacy write must not be shadowed by the
-  dead base (state.py write-path sibling-cleanup invariant).
+* truncate() must replace a stale uncommitted base at the same version
+  — a crashed compaction followed by a flush()-style truncation must not
+  resurrect the dead base's rows.
 * OTTL: a parenthesized arithmetic operand as a comparison lhs parses
   (`(end_time_unix_nano - start_time_unix_nano) > 5000000` — the
   duration idiom with explicit parens).
@@ -21,46 +20,38 @@ from atlassian_sampling_processor_spark import decision as D
 from atlassian_sampling_processor_spark.config import EngineConfig, parse_policies
 from atlassian_sampling_processor_spark.pipeline import SamplingPipeline
 from atlassian_sampling_processor_spark.policies import OTTLCondition
-from atlassian_sampling_processor_spark.state import DECISION_STATE_SCHEMA, StateStore
+from atlassian_sampling_processor_spark.state import PENDING_SPANS_SCHEMA, StateStore
 
 from .helpers import seq_table_from_spans, trace_id
 from .test_policies_golden import eval_ottl
 
 
-def test_legacy_write_removes_stale_base(spark, tmp_path):
-    """Crashed-compaction base at v=N + legacy full write at v=N: after
-    commit, the read must resolve the legacy write, not the dead base
-    ('compactions win ties' would otherwise resurrect it)."""
+def test_truncate_removes_stale_base(spark, tmp_path):
+    """Crashed-compaction base at v=N + truncate at v=N: after commit, the
+    read must resolve the truncation, not the dead base."""
     store = StateStore(spark, str(tmp_path / "ck"))
-    live = spark.createDataFrame(
-        [("a" * 32, D.SAMPLED, "p", 0)], schema=DECISION_STATE_SCHEMA
-    )
+
+    def rows(doc, b):
+        return spark.createDataFrame([(doc, [1], 1, "svc", b, None)], schema=PENDING_SPANS_SCHEMA)
+
     store.write_delta(
-        "decision_state", 0, None, inserts=live, tombstone_keys=None,
-        schema=DECISION_STATE_SCHEMA,
+        "pending_spans", 0, None, inserts=rows("a" * 32, 0), tombstone_keys=None,
+        schema=PENDING_SPANS_SCHEMA,
     )
     store.commit(0)
     # a compaction crashed mid-way at v=1, leaving an uncommitted base...
-    ghost = spark.createDataFrame(
-        [("e" * 32, D.SAMPLED, "ghost", 1)], schema=DECISION_STATE_SCHEMA
-    )
-    ghost.write.mode("overwrite").parquet(store._base_path("decision_state", 1))
-    # ...then a flush() does its legacy empty rewrite at the same version
-    store.write(
-        "decision_state", 1, spark.createDataFrame([], schema=DECISION_STATE_SCHEMA)
-    )
+    rows("e" * 32, 1).write.mode("overwrite").parquet(store._base_path("pending_spans", 1))
+    # ...then a flush() truncates at the same version
+    store.truncate("pending_spans", 1)
     store.commit(1)
-    assert store.read("decision_state", 1, DECISION_STATE_SCHEMA).count() == 0
+    assert store.read("pending_spans", 1, PENDING_SPANS_SCHEMA).count() == 0
     # and the next delta on top of the flushed state must stay ghost-free
     store.write_delta(
-        "decision_state", 2, 1,
-        inserts=spark.createDataFrame(
-            [("b" * 32, D.NOT_SAMPLED, "q", 2)], schema=DECISION_STATE_SCHEMA
-        ),
-        tombstone_keys=None, schema=DECISION_STATE_SCHEMA,
+        "pending_spans", 2, 1, inserts=rows("b" * 32, 2), tombstone_keys=None,
+        schema=PENDING_SPANS_SCHEMA,
     )
     store.commit(2)
-    docs = {r.doc_id for r in store.read("decision_state", 2, DECISION_STATE_SCHEMA).collect()}
+    docs = {r.doc_id for r in store.read("pending_spans", 2, PENDING_SPANS_SCHEMA).collect()}
     assert docs == {"b" * 32}
 
 

@@ -17,8 +17,7 @@ eviction-order parity assertion.
 
 Covers: steady-state overflow every batch, epoch moves (refresh of a
 mid-history trace), secondary-tier (LowPriority) eviction, per-version
-time travel, mid-run compaction cadences, legacy (delta-chain)
-checkpoint resume into the pending epoch era, torn-write replay, and
+time travel, mid-run compaction cadences, torn-write replay, and
 recency-refresh survival goldens.
 """
 
@@ -190,47 +189,6 @@ def test_pending_refresh_survives_eviction(spark, tmp_path):
     dec = {r.doc_id: (r.decision, r.policy)
            for r in pipe.store.read("decision_state", 1).collect()}
     assert dec[trace_id(9101)] == (D.NOT_SAMPLED, "__evicted__")
-
-
-def test_pending_legacy_chain_resume(spark, tmp_path):
-    """A round-4 checkpoint (legacy delta-chain pending_state, no evmeta)
-    must resume: per-epoch per-tier counts are derived from the chain
-    once, then epoch eviction proceeds over old + new epochs."""
-    pipe = _mk(spark, tmp_path, "legacy")
-    store = pipe.store
-    rows = [
-        # doc, hi, lo, span_count, min_start, max_end, arrival, last_seen,
-        # priority, last_low, first_source
-        (trace_id(9300 + i), 0, 9300 + i, 1, 0, 0, i % 2, i % 2,
-         D.PRIORITY_UNSPECIFIED, None, "svc")
-        for i in range(9)
-    ]
-    old = spark.createDataFrame(rows, schema=PENDING_STATE_SCHEMA)
-    store.write_delta("pending_state", 1, None, inserts=old,
-                      tombstone_keys=None, schema=PENDING_STATE_SCHEMA)
-    from atlassian_sampling_processor_spark.pipeline import (
-        PENDING_SPANS_SCHEMA, _empty,
-    )
-    from atlassian_sampling_processor_spark.state import DECISION_STATE_SCHEMA
-
-    store.write("pending_spans", 1, _empty(spark, PENDING_SPANS_SCHEMA))
-    store.write_delta("decision_state", 1, None,
-                      inserts=_empty(spark, DECISION_STATE_SCHEMA),
-                      tombstone_keys=None, schema=DECISION_STATE_SCHEMA)
-    store.commit(1)
-
-    # batch 2: +4 new primaries → 13 > cap 10: the 3 lowest of legacy
-    # epoch 0 (5 rows: i even) evict... epoch 0 holds i∈{0,2,4,6,8}
-    spans = [dict(doc_id=trace_id(9400 + i), span_id=100 + i,
-                  parent_span_id=7, batch_idx=2) for i in range(4)]
-    pipe.run(seq_table_from_spans(spark, spans))
-
-    live = {r.doc_id for r in pipe.store.read("pending_state", 2).collect()}
-    assert len(live) == PRIM_CAP
-    # victims = 3 lowest doc_ids of epoch 0
-    assert all(trace_id(9300 + i) not in live for i in (0, 2, 4))
-    assert all(trace_id(9300 + i) in live for i in (6, 8, 1, 3, 5, 7))
-    assert all(trace_id(9400 + i) in live for i in range(4))
 
 
 def test_torn_pending_epoch_write_resume(spark, tmp_path):

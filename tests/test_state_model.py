@@ -1,16 +1,16 @@
-"""Model-based check of the merge-on-read state store: random
-insert/upsert/delete batches with random compaction cadence, mirrored
-into a plain dict; after every commit the resolved table must equal the
-model — at the LATEST version and at every earlier committed version
-(time travel). Exercises the `_v >= _tv` survival rule, same-version
-upsert tombstones, compaction folds, and legacy-base interop in
-combinations the e2e scenarios don't reach."""
+"""Model-based check of the merge-on-read chain (``pending_spans``, the
+store's one chain table): random insert/upsert/delete batches with
+random compaction cadence, mirrored into a plain dict; after every
+commit the resolved table must equal the model — at the LATEST version
+and at every earlier committed version (time travel). Exercises the
+`_v >= _tv` survival rule, same-version upsert tombstones and compaction
+folds in combinations the e2e scenarios don't reach."""
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from atlassian_sampling_processor_spark.state import DECISION_STATE_SCHEMA, StateStore
+from atlassian_sampling_processor_spark.state import PENDING_SPANS_SCHEMA, StateStore
 
 KEYS = [f"k{i:02d}" for i in range(8)]
 
@@ -38,7 +38,7 @@ def test_state_store_matches_model(spark, tmp_path_factory, ops, compact_every):
 
     def rows(d):
         return spark.createDataFrame(
-            [(k, v, "m", b) for k, v in d.items()], schema=DECISION_STATE_SCHEMA
+            [(k, [v], v, "m", b, None) for k, v in d.items()], schema=PENDING_SPANS_SCHEMA
         )
 
     for b, batch in enumerate(ops):
@@ -46,7 +46,7 @@ def test_state_store_matches_model(spark, tmp_path_factory, ops, compact_every):
         deletes = set(batch)  # upserts tombstone their own key too
         prev = b - 1 if b else None
         store.write_delta(
-            "decision_state",
+            "pending_spans",
             b,
             prev,
             inserts=rows(inserts),
@@ -55,7 +55,7 @@ def test_state_store_matches_model(spark, tmp_path_factory, ops, compact_every):
                 if deletes
                 else None
             ),
-            schema=DECISION_STATE_SCHEMA,
+            schema=PENDING_SPANS_SCHEMA,
         )
         store.commit(b)
         for k in batch:
@@ -65,7 +65,7 @@ def test_state_store_matches_model(spark, tmp_path_factory, ops, compact_every):
 
     for version, expected in enumerate(history):
         got = {
-            r.doc_id: r.decision
-            for r in store.read("decision_state", version, DECISION_STATE_SCHEMA).collect()
+            r.doc_id: r.n_tok
+            for r in store.read("pending_spans", version, PENDING_SPANS_SCHEMA).collect()
         }
         assert got == expected, (version, compact_every)

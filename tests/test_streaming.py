@@ -60,33 +60,3 @@ def test_streaming_matches_batch(spark, tmp_path):
     # (sink, doc, tokens) — routing decisions must agree
     assert sorted(x[:3] for x in got_b) == sorted(x[:3] for x in got_s)
 
-
-def test_apply_in_pandas_with_state_span_count(spark, tmp_path):
-    """Per-key GroupState span_count over a live stream: a trace is
-    emitted exactly once, when its cumulative count crosses min_spans."""
-    import os
-
-    from atlassian_sampling_processor_spark.streaming import stream_sequences
-    from atlassian_sampling_processor_spark.streaming_stateful import run_span_count_stream
-
-    spans = []
-    # trace A: 3 spans split across files (crosses 3 in file 2);
-    # trace B: 1 span (never decided); trace C: 4 spans in file 1
-    a, b, c = trace_id(500), trace_id(501), trace_id(502)
-    f0 = [dict(doc_id=a, span_id=1), dict(doc_id=b, span_id=2)] + [
-        dict(doc_id=c, span_id=10 + i) for i in range(4)
-    ]
-    f1 = [dict(doc_id=a, span_id=3), dict(doc_id=a, span_id=4)]
-    stream_in = str(tmp_path / "in")
-    os.makedirs(stream_in)
-    seq_table_from_spans(spark, f0).coalesce(1).write.parquet(f"{stream_in}/f0.parquet")
-    seq_table_from_spans(spark, f1).coalesce(1).write.parquet(f"{stream_in}/f1.parquet")
-
-    stream = stream_sequences(spark, f"{stream_in}/*", max_files_per_trigger=1)
-    run_span_count_stream(
-        stream, min_spans=3, checkpoint=str(tmp_path / "ck"), out_path=str(tmp_path / "out")
-    )
-    rows = {r.doc_id: r for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    assert set(rows) == {a, c}
-    assert rows[c].total_spans == 4 and rows[c].decision == "Sampled"
-    assert rows[a].total_spans == 3  # decided at the batch where it crossed

@@ -1,13 +1,13 @@
 """Evidence that state commits are O(delta), not O(capacity).
 
-The reference's decision caches run at 10^7–10^8 entries (README.md:65-77)
-with O(1) in-place puts (internal/cache/lru_cache.go:63-71). Round 2
-rewrote the whole Spark state table every batch — O(capacity) writes.
-This bench builds a CAPACITY-row decision_state base, then measures:
+The reference's caches run at 10^7–10^8 entries (README.md:65-77) with
+O(1) in-place puts (internal/cache/lru_cache.go:63-71); rewriting a whole
+Spark state table every batch costs O(capacity). This bench builds a
+CAPACITY-row base of ``pending_spans`` (the store's merge-on-read chain
+table), then measures:
 
-* per-batch ``write_delta`` wall at DELTA rows/batch (the round-3 path);
-* the equivalent full-table rewrite wall (the round-2 shape) for the
-  same logical commit;
+* per-batch ``write_delta`` wall at DELTA rows/batch;
+* the equivalent full-table rewrite wall for the same logical commit;
 * read-resolution overhead at chain length 0 vs K (the merge-on-read
   price the delta commits pay);
 * the compaction fold (amortized over ``compact_every`` batches).
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from atlassian_sampling_processor_spark.session import get_spark  # noqa: E402
 from atlassian_sampling_processor_spark.state import (  # noqa: E402
-    DECISION_STATE_SCHEMA,
+    PENDING_SPANS_SCHEMA,
     StateStore,
 )
 
@@ -43,15 +43,17 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
 
 
 def mk_rows(spark, start: int, n: int, batch: int):
-    """n synthetic decision rows with 32-hex doc_ids (pure exprs)."""
+    """n synthetic pending-span rows with 32-hex doc_ids (pure exprs)."""
     return spark.range(start, start + n).select(
         F.lower(F.concat(
             F.lpad(F.hex(F.xxhash64("id")), 16, "0"),
             F.lpad(F.hex(F.xxhash64("id", F.lit("lo"))), 16, "0"),
         )).alias("doc_id"),
-        (F.lit(2) + (F.col("id") % 2).cast("int")).alias("decision"),
-        F.lit("bench").alias("policy"),
-        F.lit(batch).cast("int").alias("decided_batch"),
+        F.array(F.col("id").cast("int"), F.lit(batch)).alias("tokens"),
+        F.lit(2).alias("n_tok"),
+        F.lit("bench").alias("source"),
+        F.lit(batch).cast("int").alias("batch_idx"),
+        F.lit(None).cast("int").alias("flushes"),
     )
 
 
@@ -72,7 +74,7 @@ def main():
     # base: CAPACITY rows at v=0 (one-time O(capacity) — the steady state
     # any approach starts from)
     t0 = time.perf_counter()
-    store.write("decision_state", 0, mk_rows(spark, 0, CAPACITY, 0))
+    mk_rows(spark, 0, CAPACITY, 0).write.parquet(store._base_path("pending_spans", 0))
     store.commit(0)
     t_base = time.perf_counter() - t0
     print(f"base write ({CAPACITY} rows): {t_base:.2f}s", file=sys.stderr)
@@ -84,7 +86,7 @@ def main():
         ins = mk_rows(spark, CAPACITY + b * DELTA, DELTA, b)
         tomb = mk_rows(spark, (b - 1) * DELTA, DELTA, b).select("doc_id")
         t0 = time.perf_counter()
-        store.write_delta("decision_state", b, b - 1, ins, tomb, DECISION_STATE_SCHEMA)
+        store.write_delta("pending_spans", b, b - 1, ins, tomb, PENDING_SPANS_SCHEMA)
         store.commit(b)
         t_delta.append(time.perf_counter() - t0)
         print(f"delta batch {b}: {t_delta[-1]:.3f}s", file=sys.stderr)
@@ -104,19 +106,19 @@ def main():
 
     t0 = time.perf_counter()
     n_resolved = materialized(
-        store.read("decision_state", N_DELTA_BATCHES, DECISION_STATE_SCHEMA)
+        store.read("pending_spans", N_DELTA_BATCHES, PENDING_SPANS_SCHEMA)
     )
     t_read_chain = time.perf_counter() - t0
     t0 = time.perf_counter()
-    materialized(store.read("decision_state", 0, DECISION_STATE_SCHEMA))
+    materialized(store.read("pending_spans", 0, PENDING_SPANS_SCHEMA))
     t_read_base = time.perf_counter() - t0
     assert n_resolved == CAPACITY, (n_resolved, CAPACITY)
 
-    # the round-2 shape: read the previous full table, write the next
-    # full table — scan + full write every batch
-    full = store.read("decision_state", 0, DECISION_STATE_SCHEMA)
+    # the full-rewrite alternative: read the previous full table, write
+    # the next full table — scan + full write every batch
+    full = store.read("pending_spans", 0, PENDING_SPANS_SCHEMA)
     t0 = time.perf_counter()
-    store.write("decision_state_fullrw", 99, full)
+    full.write.parquet(work + "/fullrw")
     t_full = time.perf_counter() - t0
     print(f"full rewrite ({CAPACITY} rows): {t_full:.2f}s", file=sys.stderr)
 
@@ -126,14 +128,14 @@ def main():
     ins = mk_rows(spark, CAPACITY + b * DELTA, DELTA, b)
     tomb = mk_rows(spark, (b - 1) * DELTA, DELTA, b).select("doc_id")
     t0 = time.perf_counter()
-    store.write_delta("decision_state", b, b - 1, ins, tomb, DECISION_STATE_SCHEMA)
+    store.write_delta("pending_spans", b, b - 1, ins, tomb, PENDING_SPANS_SCHEMA)
     store.commit(b)
     t_compact = time.perf_counter() - t0
-    assert store.read("decision_state", b, DECISION_STATE_SCHEMA).count() == CAPACITY
+    assert store.read("pending_spans", b, PENDING_SPANS_SCHEMA).count() == CAPACITY
 
     avg_delta = sum(t_delta) / len(t_delta)
     out = {
-        "metric": "per-batch decision-state commit wall at 10^7 capacity",
+        "metric": "per-batch pending_spans commit wall at CAPACITY rows",
         "capacity": CAPACITY,
         "delta_rows_per_batch": 2 * DELTA,
         "cpus": CPUS,
