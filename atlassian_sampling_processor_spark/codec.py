@@ -206,10 +206,3 @@ def decode_headers(headers: np.ndarray) -> dict[str, np.ndarray]:
 def trace_hex(hi: int, lo: int) -> str:
     """128-bit (hi,lo) → 32-hex trace id (the ``doc_id`` column)."""
     return f"{hi & 0xFFFFFFFFFFFFFFFF:016x}{lo & 0xFFFFFFFFFFFFFFFF:016x}"
-
-
-def threshold_attr_string(value: int, hex_len: int) -> str:
-    """Reconstruct the ``sampling.tail.threshold`` attr string: ``0x`` +
-    the leading ``hex_len`` digits of the 14-hex padded 56-bit value
-    (the stored value is already right-padded per OTEP-235)."""
-    return "0x" + f"{value & ((1 << 56) - 1):014x}"[:hex_len]

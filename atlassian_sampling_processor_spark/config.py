@@ -56,23 +56,17 @@ class EngineConfig:
     # heap bytes at state-table rows
     target_heap_bytes: int = 0
     regulate_cache_delay_s: float = 0.0
+    # run_pipeline.py ends a run with the shutdown flush
+    # (processor.go:538-623) when set
     flush_on_shutdown: bool = False
     # accepted for reference-YAML compatibility; n/a by design — Spark's
     # scheduler replaces the preprocess chan (config.go:45-47)
     preprocess_buffer_size: int = 0
-    # state tables commit as O(delta) merge-on-read chains, folded into a
-    # full base snapshot every N batches (amortized O(capacity/N) write —
-    # the Iceberg MERGE shape; see state.py). 1 = full rewrite per batch.
+    # state tables commit O(delta) per batch (epoch appends for the two
+    # caches, a base/delta chain for pending_spans) and fold into a base
+    # snapshot every N batches (amortized O(capacity/N) write — the
+    # Iceberg MERGE shape; see state.py). 1 = a new base every batch.
     state_compact_every: int = 8
-    # eviction rank plan: True (default) = range-partitioned two-level
-    # rank with no single-task sort (functions/topk.py); False = per-tier
-    # window (one task per tier). Warm same-session A/B at 3M traces /
-    # 750k capacity: 130.5 s vs 138.7 s (~6% — the serial sort is mostly
-    # overlapped by concurrent jobs at this scale), but the single task
-    # is O(capacity) and the wrong shape at 10^7+ keys, hence the
-    # default. Identical results either way (the rank orders end in the
-    # unique doc_id).
-    two_level_eviction: bool = True
 
     def primary_capacity(self) -> int:
         return max(1, int(self.primary_cache_size * self.primary_warm_fraction))
@@ -308,7 +302,6 @@ def load_config(path_or_dict,
         regulate_cache_delay_s=parse_duration(cfg.get("regulate_cache_delay", 0)),
         flush_on_shutdown=bool(cfg.get("flush_on_shutdown", False)),
         preprocess_buffer_size=int(cfg.get("preprocess_buffer_size", 0)),
-        two_level_eviction=bool(cfg.get("two_level_eviction", True)),
         state_compact_every=int(cfg.get("state_compact_every", 8)),
     )
     validate_engine(eng)

@@ -100,6 +100,20 @@ def _flush_count(c):
     return F.when(c >= 0, c)
 
 
+def header_valid():
+    """The header check a raw row must pass before it is decoded: enough
+    tokens for the fixed-width header, and the format's magic and
+    version in slots 0 and 1. NULL (e.g. null tokens) counts as invalid.
+    Rows that fail it are the reference's undecodable trace data
+    (reportTraceDataErr, processor.go:676-680)."""
+    return F.coalesce(
+        (F.size("tokens") >= codec.HEADER_LEN)
+        & (F.try_element_at("tokens", F.lit(1)) == codec.MAGIC)
+        & (F.try_element_at("tokens", F.lit(2)) == codec.VERSION),
+        F.lit(False),
+    )
+
+
 def routing_fields(valid):
     """(is decision span, flush count) read straight off a raw row's
     tokens, NULL unless ``valid`` (the header check) holds — so ANSI
@@ -229,8 +243,3 @@ def enrich_spans(df: DataFrame) -> DataFrame:
         .withColumn("scope_name", _idx_lookup([n for n, _ in codec.SCOPE_INFO], F.col("name_id")))
         .withColumn("scope_version", _idx_lookup([v for _, v in codec.SCOPE_INFO], F.col("name_id")))
     )
-
-
-def load_and_parse(spark, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    return enrich_spans(parse_sequences(df))

@@ -2,17 +2,18 @@
 
 One ``process_batch`` call is the Spark re-expression of the reference's
 ``ConsumeTraces`` hot path (processor.go:239-406) over a whole arrival
-slice at once:
+slice at once, as an ordered list of phases:
 
-  parse (vectorized)                      ConsumeTraces entry
-  decision-span ingest                    processor.go:436-480
-  decision_state join → early release     earlyDecisionChecks processor.go:408-430
-  groupBy(doc_id) agg                     NewTraceData metadata (tracedata.go:24-62)
-  left join pending_state + merge exprs   Metadata.MergeWith (metadata.go:29-39)
-  ordered when/coalesce decision chain    decider.MakeDecision (decider.go:41-81)
-  one routing pass over the arrivals      processor.go:369-404, 515-536
-  window-rank capacity eviction           tiered_cache.go:41-49 + lru eviction
-  state write + atomic commit             resumability (DESIGN.md:148-167)
+  load      committed state + epoch counts   resumability (DESIGN.md:148-167)
+  ingest    parse, decision-span ingest      processor.go:436-480
+  evaluate  decision_state anti-join         earlyDecisionChecks processor.go:408-430
+            groupBy(doc_id) agg              NewTraceData metadata (tracedata.go:24-62)
+            left join pending_state + merge  Metadata.MergeWith (metadata.go:29-39)
+            ordered when/coalesce chain      decider.MakeDecision (decider.go:41-81)
+  count     one counters action              decider.go:60-74, lru_cache.go:49-58
+  evict     epoch-watermark eviction         tiered_cache.go:41-49 + lru eviction
+  route     one pass over the arrivals       processor.go:369-404, 515-536
+  commit    state write + atomic commit      resumability (DESIGN.md:148-167)
 
 Scale notes (100 TB / 1000 executors):
 * The token payload is never shuffled: the per-trace agg shuffles only
@@ -21,39 +22,33 @@ Scale notes (100 TB / 1000 executors):
   shard co-location (util.go:42-49) is the agg's hash partitioning.
 * Routing scans each arrival slice once: one frame reads the header
   check and two header slots (decision-span flag, flush count), joins
-  the early-decision state and the per-trace outcomes, and one ``when``
-  chain gives every span its (sink, reason, policy). The pending-spans
-  inserts are the same frame's still-pending rows. Nothing on the
-  decide path runs Python (the probabilistic hash is a Catalyst
+  the early-decision state and the per-trace terminal outcomes, and one
+  ``when`` chain gives every span its (sink, reason, policy). The
+  pending-spans inserts are the same frame's still-pending rows. Nothing
+  on the decide path runs Python (the probabilistic hash is a Catalyst
   expression), so a batch starts no Python worker.
 * State joins are on doc_id; with Iceberg/bucketed state tables they're
   co-partitioned and shuffle-free. Here (plain parquet) AQE picks
   broadcast when state is small.
-* Capacity eviction ranks per tier; the ranked input is bounded by
-  (capacity + batch trace count) per tier, so the single-partition
-  window is bounded, not O(corpus). For very large capacities, swap to
-  a two-level rank (per-partition top-K then global).
+* Capacity eviction never scans a cache: per-epoch per-kind live counts
+  ride each epoch table's evmeta, whole epochs fall off by a driver-side
+  watermark advance, and at most one boundary epoch per kind is read for
+  a partial eviction.
 * Micro-batch fixed cost is the per-batch Spark job count and the
-  driver's planning time, not the rows. A batch runs ONE serial counters
-  action (an aggregation over the per-trace decisions that yields every
-  driver-side counter and plans both cache evictions), then five
-  concurrent output jobs: ONE partitioned write for all three sinks with
-  Observation-counted rows, one write per state table (a direct base
-  write when compaction is due) and the drift guard. State reads are
-  schema-bound (no inference job) and the metrics table is written on
-  the driver. The per-trace frames are local-checkpointed, so later
-  plans scan them instead of re-planning the parse/aggregate lineage.
-  Measured on a 4-CPU VM, trickle-shaped batch (1.5k traces, evicting
-  caches, compaction every batch, perfbench traced): 65 Spark jobs per
-  batch before the counters action and direct compaction, 26–27 after,
-  24 with one-pass routing (``tests/test_batch_commit.py`` holds its
-  tiny trickle-shaped batch to 24).
+  driver's planning time, not the rows: one serial counters action, then
+  five concurrent output jobs (one partitioned write for all three
+  sinks, one write per state table, the drift guard). State reads are
+  schema-bound, metrics are written on the driver, and the per-trace
+  frames are local-checkpointed so later plans scan them instead of
+  re-planning the parse lineage. ``tests/test_batch_commit.py`` holds a
+  tiny trickle-shaped batch to 24 jobs.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -63,8 +58,8 @@ from . import codec
 from . import decision as D
 from .aggregate import aggregate_batch, merge_with_pending, with_hash_columns
 from .config import EngineConfig
-from .decider import make_decision, post_decision_state
-from .parse import enrich_core, enrich_spans, parse_sequences, routing_fields
+from .decider import decision_from_column, make_decision, post_decision_state
+from .parse import enrich_core, enrich_spans, header_valid, parse_sequences, routing_fields
 from .policies import Policy
 from .state import (
     DECISION_STATE_SCHEMA,
@@ -73,6 +68,7 @@ from .state import (
     StateStore,
 )
 from .state import empty_frame as _empty
+from .state import union_all as _union
 
 # columns carried into sinks / pending payload — the original sequence row
 # (byte-exact tokens) + arrival lineage
@@ -165,6 +161,37 @@ def _release(spark: SparkSession, df: DataFrame) -> None:
     spark.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
 
 
+def _status(sink, reason, policy=None):
+    """A routed row's (sink, reason, policy) struct."""
+    if policy is None:
+        policy = F.lit(None).cast("string")
+    return F.struct(
+        F.lit(sink).alias("sink"), F.lit(reason).alias("reason"), policy.alias("policy")
+    )
+
+
+def _terminal(decided: DataFrame, new_dec: DataFrame, evicted: DataFrame | None) -> DataFrame:
+    """Each trace's terminal outcome this batch, ``(doc_id, decision,
+    policy, tier)``: the evaluated traces decided Sampled/NotSampled, the
+    decision-span decisions (policy ``__decision_span__``) and the
+    pending eviction victims (NotSampled by policy ``__evicted__``, tier
+    set; processor.go:626-658). The three sets are disjoint: evaluation
+    skips every trace with a decision, and a victim is still pending."""
+    no_tier = F.lit(None).cast("string").alias("tier")
+    parts = [
+        decided.filter(F.col("decision").isin(*D.CACHED_KINDS)).select(
+            "doc_id", "decision", "policy", no_tier
+        ),
+        new_dec.select("doc_id", "decision", "policy", no_tier),
+    ]
+    if evicted is not None:
+        parts.append(evicted.select(
+            "doc_id", F.lit(D.NOT_SAMPLED).alias("decision"),
+            F.lit(EVICTION_POLICY).alias("policy"), "tier",
+        ))
+    return _union(parts)
+
+
 @dataclass
 class BatchResult:
     batch_idx: int
@@ -175,6 +202,60 @@ class BatchResult:
     not_sampled_traces: int = 0
     evicted_traces: int = 0
     pending_traces: int = 0
+
+
+@dataclass
+class _Loaded:
+    """The state a batch starts from, as committed by the previous one."""
+
+    prev: int | None
+    pend_state: DataFrame
+    pend_spans: DataFrame
+    dec_state: DataFrame
+    nop_dec: bool  # both decision caches at capacity 0
+    # per-epoch per-kind live counts and per-kind watermarks of the two
+    # epoch caches; the count and evict phases update them in place
+    pcounts: dict[int, list[int]]
+    pwm: dict
+    dcounts: dict[int, list[int]]
+    dwm: dict
+
+
+@dataclass
+class _Counters:
+    """Driver-side counts from the batch's one counters action."""
+
+    err_counts: dict[str, int]  # top-level policy → evaluation errors
+    # (policy, decision, decision_from) → traces
+    dec_counts: dict[tuple, int] = field(default_factory=dict)
+    # decision → traces decided by decision spans
+    ds_counts: dict[int, int] = field(default_factory=dict)
+    n_eval: int = 0
+    hits: int = 0  # evaluated traces already in the pending cache
+    n_moved: int = 0  # pending rows that leave their old epoch
+
+    def decided(self, kind: int) -> int:
+        return sum(n for (_, d, _), n in self.dec_counts.items() if d == kind)
+
+
+@dataclass
+class _Eviction:
+    """Both caches' eviction plans (driver arithmetic), the frames that
+    carry them out and the batch's terminal outcomes."""
+
+    updated: DataFrame  # this batch's pending_state rows (epoch b)
+    evicted: DataFrame | None  # pending victims, checkpointed
+    removal: DataFrame | None  # pending_state (doc_id, last_seen_batch) removal keys
+    planned: dict[str, tuple[int, int]]  # tier → (victims, Σ age in batches)
+    terminal: DataFrame  # see _terminal
+    decisions: DataFrame  # this batch's decision_state rows
+    victims: DataFrame | None = None  # decision_state partial-eviction keys, checkpointed
+    n_victims: int = 0
+    dec_ev_age: dict[int, tuple[int, int]] = field(default_factory=dict)
+
+    @property
+    def n_evicted(self) -> int:
+        return sum(n for n, _ in self.planned.values())
 
 
 class SamplingPipeline:
@@ -248,67 +329,65 @@ class SamplingPipeline:
     # ------------------------------------------------------------- batch step
 
     def process_batch(self, raw_batch: DataFrame, b: int) -> BatchResult:
-        t_batch0 = time.perf_counter()
+        """Run one arrival slice through the phases in order; the batch
+        becomes visible only when ``_commit`` moves the ``LATEST``
+        marker."""
+        t0 = time.perf_counter()
+        st = self._load()
+        raw_batch, reg, new_dec, dec_mid = self._ingest(raw_batch, b, st.dec_state)
+        decided = self._evaluate(b, reg, dec_mid, st.pend_state)
+        ds_moved, cnt = self._count(b, decided, new_dec, st)
+        ev = self._evict(b, st, decided, new_dec, ds_moved, cnt)
+        routed, pending_inserts = self._route(
+            b, raw_batch, dec_mid, decided, ev.terminal, st.pend_spans
+        )
+        return self._commit(
+            b, t0, st, cnt, ev, routed, pending_inserts, (decided, new_dec, ds_moved)
+        )
+
+    def _load(self) -> _Loaded:
+        """The previous batch's committed state frames and epoch counts.
+        A nop decision cache (both capacities 0, nop_cache.go:11-40)
+        always misses, so the batch sees an empty one even on a
+        checkpoint that held decisions before a reconfigure to capacity
+        0."""
         prev = self.store.last_committed_batch()
-        pend_state = self.store.read("pending_state", prev, PENDING_STATE_SCHEMA)
-        pend_spans = self.store.read("pending_spans", prev, PENDING_SPANS_SCHEMA)
-        # nop decision cache (nop_cache.go:11-40): Get always misses, so
-        # the early-decision join sees an empty cache even on a checkpoint
-        # that held decisions before a reconfigure to capacity 0
         nop_dec = (
             self.engine.sampled_cache_size == 0
             and self.engine.non_sampled_cache_size == 0
         )
+        pend_state = self.store.read("pending_state", prev, PENDING_STATE_SCHEMA)
+        pend_spans = self.store.read("pending_spans", prev, PENDING_SPANS_SCHEMA)
         dec_state = (
             _empty(self.spark, DECISION_STATE_SCHEMA)
             if nop_dec
             else self.store.read("decision_state", prev, DECISION_STATE_SCHEMA)
         )
-        # the epoch caches' per-epoch per-kind live counts and watermarks
         pcounts, pwm = self.store.epoch_meta("pending_state", prev)
         dcounts, dwm = ({}, {}) if nop_dec else self.store.epoch_meta("decision_state", prev)
+        return _Loaded(prev, pend_state, pend_spans, dec_state, nop_dec, pcounts, pwm, dcounts, dwm)
 
+    def _ingest(
+        self, raw_batch: DataFrame, b: int, dec_state: DataFrame
+    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+        """Header check, parse/enrich and the decision-span ingest
+        (processor.go:436-480). Returns the raw batch with its lineage
+        columns, the regular spans, this batch's decision-span decisions
+        (checkpointed) and ``decision_state`` with them. Rows failing
+        :func:`header_valid` are never decoded (ANSI ``element_at`` never
+        sees a short array); strings are enriched only for OTTL policies.
+        A trace's first decision span wins over later ones and loses to
+        ``decision_state``; within a batch the lowest span_id wins
+        (SURVEY.md §7 hard part b)."""
         if "flushes" not in raw_batch.columns:
             raw_batch = raw_batch.withColumn("flushes", F.lit(None).cast("int"))
         if "batch_idx" not in raw_batch.columns:
             raw_batch = raw_batch.withColumn("batch_idx", F.lit(b))
-
-        # Parse is a narrow map (expression decoder); the per-trace agg
-        # shuffles only the pruned numeric columns, and the small per-trace
-        # decision/state tables broadcast (64MB threshold) — the token
-        # payload itself is never shuffled. (The reference's
-        # shardIDForTrace co-location, util.go:42-49, maps to the agg's
-        # hash partitioning on doc_id.) String/map enrichment (attrs,
-        # names) is only materialized when a configured policy actually
-        # reads it (OTTL); the numeric core carries everything else.
         enrich = enrich_spans if self._needs_span_strings() else enrich_core
-        # no persist: the decision-span ingest, the aggregate and the
-        # routing frame each column-prune their own scan of the
-        # (page-cached) batch parquet, which beats materializing the full
-        # token payload into the block store
-        # internal-error guard (reportTraceDataErr, processor.go:676-680):
-        # rows whose token header fails validation can't be decoded —
-        # routed to the drop sink with reason=internal_error and counted
-        # into internal_error_dropped_spans (the reference drops silently;
-        # a sink row keeps our conservation invariant auditable). The
-        # filter sits BELOW the decoder so ANSI element_at never sees a
-        # short array.
-        valid = F.coalesce(
-            (F.size("tokens") >= codec.HEADER_LEN)
-            & (F.try_element_at("tokens", F.lit(1)) == codec.MAGIC)
-            & (F.try_element_at("tokens", F.lit(2)) == codec.VERSION),
-            F.lit(False),  # NULL (e.g. null tokens) counts as invalid
-        )
-        spans = enrich(parse_sequences(raw_batch.filter(valid)))
-        reg = spans.filter(~F.col("is_decision_span"))
-        dec_spans = spans.filter(F.col("is_decision_span"))
-
-        # -- 1. decision-span ingest (processor.go:436-480): first decision
-        # per trace wins; conflicts with existing decision_state ignored.
-        # Within-batch tiebreak: lowest span_id (the reference's "first
-        # processed" is shard-arrival order; see SURVEY.md §7 hard part b).
-        new_dec_from_spans = (
-            dec_spans.groupBy("doc_id")
+        spans = enrich(parse_sequences(raw_batch.filter(header_valid())))
+        new_dec = _checkpoint(
+            spans.filter(F.col("is_decision_span"))
+            .groupBy("doc_id")
             .agg(F.min_by("decision_value", "span_id").alias("dv"))
             .join(dec_state.select("doc_id"), "doc_id", "left_anti")
             .select(
@@ -318,49 +397,134 @@ class SamplingPipeline:
                 F.lit(b).alias("decided_batch"),
             )
         )
-        new_dec_from_spans = _checkpoint(new_dec_from_spans)
-        dec_state_mid = dec_state.unionByName(new_dec_from_spans)
+        reg = spans.filter(~F.col("is_decision_span"))
+        return raw_batch, reg, new_dec, dec_state.unionByName(new_dec)
 
-        # -- 2. early decision check (processor.go:408-430): only traces
-        # with no decision yet are evaluated; the routing frame (step 6)
-        # releases or drops the late spans of decided ones.
-        to_eval = reg.join(dec_state_mid.select("doc_id"), "doc_id", "left_anti")
-
-        decspan_sampled = new_dec_from_spans.filter(F.col("decision") == D.SAMPLED).select("doc_id")
-        decspan_notsampled = new_dec_from_spans.filter(
-            F.col("decision") == D.NOT_SAMPLED
-        ).select("doc_id")
-
-        # -- 3. evaluate remaining traces
+    def _evaluate(
+        self, b: int, reg: DataFrame, dec_mid: DataFrame, pend_state: DataFrame
+    ) -> DataFrame:
+        """Early-decision check (processor.go:408-430), then aggregate,
+        merge and decide the traces with no decision yet. ``decided`` is
+        local-checkpointed: the counters action materializes it once and
+        later plans scan its blocks instead of re-analyzing the lineage.
+        (A lost executor fails the batch, which replays from the last
+        commit.)"""
+        to_eval = reg.join(dec_mid.select("doc_id"), "doc_id", "left_anti")
         agg = aggregate_batch(to_eval, self.policies, b, salt_buckets=self.engine.salt_buckets)
-        merged = merge_with_pending(agg, pend_state)
-        merged = with_hash_columns(merged, self.policies)
-        # per-trace frames (O(batch traces)) are local-checkpointed: the
-        # counters action materializes them once, and every later plan
-        # scans the blocks instead of re-analyzing the parse/aggregate/
-        # decide lineage — on a trickle batch that driver-side planning,
-        # not the rows, was most of the wall. (A lost executor fails the
-        # batch, which replays from the last commit.)
-        decided = _checkpoint(
+        merged = with_hash_columns(merge_with_pending(agg, pend_state), self.policies)
+        return _checkpoint(
             post_decision_state(make_decision(merged, self.policies), self.policies)
         )
 
-        sampled = decided.filter(F.col("decision") == D.SAMPLED)
-        not_sampled = decided.filter(F.col("decision") == D.NOT_SAMPLED)
-        pending = decided.filter(F.col("decision").isin(D.PENDING, D.LOW_PRIORITY))
-
-        sampled_keys = sampled.select("doc_id", "policy")
-        not_sampled_keys = not_sampled.select("doc_id", "policy")
-
-        # -- 4. pending-state rewrite (puts before eviction,
-        # tiered_cache.go:41-49). `decided` carries exactly the batch's
-        # evaluated trace keys (row-preserving over the agg) and is
-        # checkpointed — reading it beats recomputing the agg lineage in
-        # every downstream join that needs the touched key set.
-        touched = decided.select("doc_id").unionByName(
-            new_dec_from_spans.select("doc_id")
+    def _count(
+        self, b: int, decided: DataFrame, new_dec: DataFrame, st: _Loaded
+    ) -> tuple[DataFrame, _Counters]:
+        """The ONE counters action, the batch's only serial driver sync
+        before the output jobs: one small aggregation over ``decided``,
+        the decision-span ingest and the pending rows that ingest moves
+        (``ds_moved``). It yields the pending epoch moves (-1 at the old
+        epoch, +1 at epoch b, applied to ``st.pcounts``), policy_decisions
+        and decision_from (decider.go:60-74), cache_reads hits
+        (lru_cache.go:49-58), evaluation errors per top-level policy the
+        decider reached (decider.go:46-48) and the decision-span counts,
+        and materializes the three checkpoints."""
+        tidx = {t: i for i, t in enumerate(D.TIERS)}
+        hit = F.col("cached_span_count").isNotNull()
+        ds_moved = _checkpoint(
+            st.pend_state.join(F.broadcast(new_dec.select("doc_id")), "doc_id", "leftsemi")
+            .select("doc_id", "last_seen_batch", "priority")
         )
-        updated = pending.select(
+        decisive = F.col("decision").isin(*D.DECISIVE)
+        n_pol = len(self.policies)
+        err_flags = [
+            (
+                (F.col("policy_index").isNull() | (F.lit(i) <= F.col("policy_index")))
+                & (F.element_at("policy_decisions", i + 1) == D.UNSPECIFIED)
+            ).cast("long").alias(f"_e{i}")
+            for i in range(n_pol)
+        ]
+        no_err = [F.lit(0).cast("long").alias(f"_e{i}") for i in range(n_pol)]
+        null_s, null_i = F.lit(None).cast("string"), F.lit(None).cast("int")
+        counter_rows = (
+            _union([
+                decided.select(
+                    F.lit("eval").alias("src"),
+                    "decision",
+                    F.when(decisive, F.col("policy")).alias("policy"),
+                    F.when(decisive, decision_from_column(self.policies)).alias("decision_from"),
+                    F.when(hit, F.col("cached_last_seen_batch")).alias("old_e"),
+                    F.when(hit, D.tier_of(F.col("cached_priority"))).alias("old_t"),
+                    F.when(
+                        F.col("decision").isin(D.PENDING, D.LOW_PRIORITY),
+                        D.tier_of(F.col("new_priority")),
+                    ).alias("new_t"),
+                    *err_flags,
+                ),
+                new_dec.select(
+                    F.lit("span").alias("src"), "decision", null_s.alias("policy"),
+                    null_s.alias("decision_from"), null_i.alias("old_e"),
+                    null_s.alias("old_t"), null_s.alias("new_t"), *no_err,
+                ),
+                ds_moved.select(
+                    F.lit("moved").alias("src"), null_i.alias("decision"),
+                    null_s.alias("policy"), null_s.alias("decision_from"),
+                    F.col("last_seen_batch").alias("old_e"),
+                    D.tier_of(F.col("priority")).alias("old_t"), null_s.alias("new_t"),
+                    *no_err,
+                ),
+            ])
+            .groupBy("src", "decision", "policy", "decision_from", "old_e", "old_t", "new_t")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                *[F.sum(f"_e{i}").alias(f"_e{i}") for i in range(n_pol)],
+            )
+            .collect()
+        )
+        cnt = _Counters(err_counts={p.name: 0 for p in self.policies})
+        for r in counter_rows:
+            n = int(r["n"])
+            if r["old_e"] is not None:
+                st.pcounts.setdefault(int(r["old_e"]), [0, 0])[tidx[r["old_t"]]] -= n
+                cnt.n_moved += n
+            if r["src"] == "span":
+                cnt.ds_counts[r["decision"]] = cnt.ds_counts.get(r["decision"], 0) + n
+            if r["src"] != "eval":
+                continue
+            cnt.n_eval += n
+            cnt.hits += n if r["old_e"] is not None else 0
+            if r["new_t"] is not None:
+                st.pcounts.setdefault(b, [0, 0])[tidx[r["new_t"]]] += n
+            if r["decision"] in D.DECISIVE:
+                key = (r["policy"], r["decision"], r["decision_from"])
+                cnt.dec_counts[key] = cnt.dec_counts.get(key, 0) + n
+            for i, p in enumerate(self.policies):
+                cnt.err_counts[p.name] += int(r[f"_e{i}"] or 0)
+        return ds_moved, cnt
+
+    def _evict(
+        self,
+        b: int,
+        st: _Loaded,
+        decided: DataFrame,
+        new_dec: DataFrame,
+        ds_moved: DataFrame,
+        cnt: _Counters,
+    ) -> _Eviction:
+        """Capacity eviction of both caches, planned on the driver, plus
+        the batch's terminal outcomes. Both caches are FIFO epoch stores,
+        so eviction is a watermark advance plus at most one boundary-epoch
+        read per kind. Pending (tiered_cache.go:41-49, lru_cache.go:94-99):
+        rows past a tier's capacity evict ⇒ NotSampled
+        (processor.go:626-658) in keep-order desc(last_seen_batch,
+        arrival_batch, doc_id); a touched row MOVES to epoch b, and its old
+        epoch comes from ``decided``, so nothing scans the cache.
+        Decisions (processor.go:142-148) are immutable, so LRU order is
+        insertion order. Both victim sets equal a full keep-order rank
+        (tests/test_round4_epochs.py, tests/test_round5_pending_epochs.py,
+        tests/test_differential.py)."""
+        tier = D.tier_of(F.col("priority"))
+        tidx = {t: i for i, t in enumerate(D.TIERS)}
+        updated = decided.filter(F.col("decision").isin(D.PENDING, D.LOW_PRIORITY)).select(
             "doc_id",
             "trace_hi",
             "trace_lo",
@@ -373,499 +537,304 @@ class SamplingPipeline:
             F.col("new_last_low_policy").alias("last_low_policy"),
             F.col("first_source"),
         )
-
-        # -- 5. capacity eviction per tier (lru_cache.go:94-99): rows past
-        # capacity evict ⇒ NotSampled (processor.go:626-658), keep-order
-        # desc(last_seen_batch, arrival_batch, doc_id). The pending cache
-        # is a FIFO-by-last_seen-epoch store like the decision caches —
-        # recency refreshes are delta-shaped MOVES (touched rows leave
-        # their old epoch + re-enter epoch b), so per-epoch per-tier live
-        # counts are pure driver arithmetic and eviction is a watermark
-        # advance plus at most one boundary-epoch partial read per tier.
-        # The victim key-set equals the recency rank's (tested
-        # differentially in tests/test_round5_pending_epochs.py and
-        # against the independent simulator in tests/test_differential.py).
-        tier = D.tier_of(F.col("priority"))
-        tidx = {t: i for i, t in enumerate(D.TIERS)}
         caps_pend = {
             "primary": self.engine.primary_capacity(),
             "secondary": self.engine.secondary_cache_size,
         }
-
-        # delta-shaped epoch moves: touched pending rows leave their old
-        # epochs (their keys also become this batch's evict keys), updated
-        # rows enter epoch b. The evaluated traces' old rows come straight
-        # from the checkpointed decision frame (the merge already joined
-        # them — cached_* columns), so the eviction step performs NO
-        # full-capacity scan; only the decision-span ingest path needs a
-        # pending_state key lookup (broadcast of the tiny ingest set).
-        hit = F.col("cached_span_count").isNotNull()
-        ds_moved = _checkpoint(
-            pend_state.join(
-                F.broadcast(new_dec_from_spans.select("doc_id")), "doc_id", "leftsemi"
-            ).select("doc_id", "last_seen_batch", "priority")
+        old_pwm = dict(st.pwm)
+        pre_counts = {e: list(c) for e, c in st.pcounts.items()}
+        partial_pend, planned = plan_decision_eviction(
+            st.pcounts, st.pwm, caps_pend, b, kinds=D.TIERS
         )
-        moved = (
-            decided.filter(hit)
-            .select(
-                "doc_id",
-                F.col("cached_last_seen_batch").alias("last_seen_batch"),
-                F.col("cached_priority").alias("priority"),
-            )
-            .unionByName(ds_moved)
-        )
+        touched = decided.select("doc_id").unionByName(new_dec.select("doc_id"))
 
-        # ONE counters action — the batch's only serial driver sync before
-        # the output jobs. A single aggregation over the checkpointed
-        # `decided` frame, the decision-span ingest and its pending moves
-        # yields, grouped small: the pending epoch moves (-1 at the old
-        # epoch, +1 at epoch b), the policy_decisions / decision_from
-        # counts (decider.go:60-74), cache_reads hits (lru_cache.go:49-58),
-        # per-policy evaluation errors and the decision-span counts. It
-        # also materializes `decided`, `new_dec_from_spans` and `ds_moved`
-        # for every later job.
-        from .decider import decision_from_column
-
-        decisive = F.col("decision").isin(*D.DECISIVE)
-        # policy-error telemetry: traces whose evaluation errored (decision
-        # Unspecified) per TOP-LEVEL policy — the reference's
-        # log-and-continue warning (decider.go:46-48), which fires for ANY
-        # evaluator error, including a propagate OTTL nested inside
-        # and/root_spans/downgrader (the sub's Unspecified propagates to
-        # the composite's decision). Only policies the decider actually
-        # evaluated count (i ≤ decisive index), matching the loop.
-        err_flags = [
-            (
-                (F.col("policy_index").isNull() | (F.lit(i) <= F.col("policy_index")))
-                & (F.element_at("policy_decisions", i + 1) == D.UNSPECIFIED)
-            ).cast("long").alias(f"_e{i}")
-            for i in range(len(self.policies))
-        ]
-        no_err = [F.lit(0).cast("long").alias(f"_e{i}") for i in range(len(self.policies))]
-        null_s, null_i = F.lit(None).cast("string"), F.lit(None).cast("int")
-        counter_rows = (
-            decided.select(
-                F.lit("eval").alias("src"),
-                "decision",
-                F.when(decisive, F.col("policy")).alias("policy"),
-                F.when(decisive, decision_from_column(self.policies)).alias("decision_from"),
-                F.when(hit, F.col("cached_last_seen_batch")).alias("old_e"),
-                F.when(hit, D.tier_of(F.col("cached_priority"))).alias("old_t"),
-                F.when(
-                    F.col("decision").isin(D.PENDING, D.LOW_PRIORITY),
-                    D.tier_of(F.col("new_priority")),
-                ).alias("new_t"),
-                *err_flags,
-            )
-            .unionByName(
-                new_dec_from_spans.select(
-                    F.lit("span").alias("src"), "decision", null_s.alias("policy"),
-                    null_s.alias("decision_from"), null_i.alias("old_e"),
-                    null_s.alias("old_t"), null_s.alias("new_t"), *no_err,
-                )
-            )
-            .unionByName(
-                ds_moved.select(
-                    F.lit("moved").alias("src"), null_i.alias("decision"),
-                    null_s.alias("policy"), null_s.alias("decision_from"),
-                    F.col("last_seen_batch").alias("old_e"),
-                    D.tier_of(F.col("priority")).alias("old_t"), null_s.alias("new_t"),
-                    *no_err,
-                )
-            )
-            .groupBy("src", "decision", "policy", "decision_from", "old_e", "old_t", "new_t")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(f"_e{i}").alias(f"_e{i}") for i in range(len(self.policies))],
-            )
-            .collect()
-        )
-        dec_counts: dict[tuple, int] = {}
-        ds_counts: dict[int, int] = {}
-        err_counts = {p.name: 0 for p in self.policies}
-        n_eval = hits = n_moved = 0
-        for r in counter_rows:
-            n = int(r["n"])
-            if r["old_e"] is not None:
-                pcounts.setdefault(int(r["old_e"]), [0, 0])[tidx[r["old_t"]]] -= n
-                n_moved += n
-            if r["src"] == "span":
-                ds_counts[r["decision"]] = ds_counts.get(r["decision"], 0) + n
-            if r["src"] != "eval":
-                continue
-            n_eval += n
-            hits += n if r["old_e"] is not None else 0
-            if r["new_t"] is not None:
-                pcounts.setdefault(b, [0, 0])[tidx[r["new_t"]]] += n
-            if r["decision"] in D.DECISIVE:
-                key = (r["policy"], r["decision"], r["decision_from"])
-                dec_counts[key] = dec_counts.get(key, 0) + n
-            for i, p in enumerate(self.policies):
-                err_counts[p.name] += int(r[f"_e{i}"] or 0)
-        n_sampled = sum(n for (p, d, g), n in dec_counts.items() if d == D.SAMPLED)
-        n_not_sampled = sum(n for (p, d, g), n in dec_counts.items() if d == D.NOT_SAMPLED)
-
-        old_pwm = dict(pwm)
-        pre_counts = {e: list(c) for e, c in pcounts.items()}
-        partial_pend, planned_ev = plan_decision_eviction(
-            pcounts, pwm, caps_pend, b, kinds=D.TIERS
-        )
-        n_evicted = sum(n for n, _ in planned_ev.values())
-
-        def pend_slice(e: int) -> DataFrame:
-            """Live tier rows of one last_seen epoch as of this batch:
-            epoch b is the in-memory `updated` set; older epochs read ONE
-            epoch file/partition and drop this batch's moved rows."""
-            if e == b:
-                return updated
-            return self.store.read_epoch_slice(
-                "pending_state", prev, e, PENDING_STATE_SCHEMA
+        def tier_slice(t: str, e: int) -> DataFrame:
+            """Live tier-t rows of one last_seen epoch as of this batch:
+            epoch b is ``updated``; an older epoch reads ONE epoch
+            file/partition and drops this batch's moved rows."""
+            df = updated if e == b else self.store.read_epoch_slice(
+                "pending_state", st.prev, e, PENDING_STATE_SCHEMA
             ).join(F.broadcast(touched), "doc_id", "left_anti")
+            return df.filter(tier == t)
 
-        def ev_part(df: DataFrame, t: str, e: int) -> DataFrame:
+        def victims_of(df: DataFrame, t: str, e: int) -> DataFrame:
             return df.select(
                 "doc_id", F.lit(t).alias("tier"), "arrival_batch", F.lit(e).alias("ev_epoch")
             )
 
-        evicted_full = None
-        ev_parts = []
-        for t in D.TIERS:
-            lo, hi = old_pwm.get(t, -1), pwm.get(t, -1)
-            for e in sorted(
-                e for e in pre_counts if lo < e <= hi and pre_counts[e][tidx[t]] > 0
-            ):
-                ev_parts.append(ev_part(pend_slice(e).filter(tier == t), t, e))
-        for t, e, k in partial_pend:
-            # boundary-epoch partial eviction: the k lowest
-            # (arrival_batch, doc_id) — exactly the recency rank's victims
-            ev_parts.append(ev_part(
-                pend_slice(e).filter(tier == t).orderBy("arrival_batch", "doc_id").limit(k),
-                t, e,
-            ))
-        if not ev_parts:
-            evicted = _empty(self.spark, "doc_id string, tier string")
-        else:
-            evicted_full = ev_parts[0]
-            for part in ev_parts[1:]:
-                evicted_full = evicted_full.unionByName(part)
-            evicted_full = _checkpoint(evicted_full)
-            evicted = evicted_full.select("doc_id", "tier")
-        # the pending removal keys: moved rows' old epochs plus every
-        # eviction victim's (doc_id, epoch) — victims in epoch b are
-        # written with the epoch and killed by their key, one anti-join
-        # for both (whole-epoch victims' keys are redundant with the
-        # watermark but harmless — O(batch) either way)
-        removal = moved.select("doc_id", "last_seen_batch") if n_moved else None
-        if evicted_full is not None:
-            ev_keys = evicted_full.select("doc_id", F.col("ev_epoch").alias("last_seen_batch"))
-            removal = ev_keys if removal is None else removal.unionByName(ev_keys)
-
-        # -- 6. route everything to one partitioned sink write. Each span
-        # is released once, after its trace's one decision
-        # (processor.go:369-404): ONE frame over the arrival slice joins
-        # the early-decision state and the broadcast per-trace outcomes,
-        # and one `when` chain gives each span its (sink, reason, policy).
-        # Still-pending spans get sink "pending" (the pending_spans
-        # inserts); consumed decision spans get none.
-        def status(sink, reason, policy=F.lit(None).cast("string")):
-            return F.struct(
-                F.lit(sink).alias("sink"), F.lit(reason).alias("reason"), policy.alias("policy")
+        ev_parts = [
+            victims_of(tier_slice(t, e), t, e)
+            for t in D.TIERS
+            for e in sorted(pre_counts)
+            if old_pwm.get(t, -1) < e <= st.pwm.get(t, -1) and pre_counts[e][tidx[t]] > 0
+        ]
+        # a boundary epoch's partial eviction takes the k lowest
+        # (arrival_batch, doc_id) — exactly the recency rank's victims
+        ev_parts += [
+            victims_of(tier_slice(t, e).orderBy("arrival_batch", "doc_id").limit(k), t, e)
+            for t, e, k in partial_pend
+        ]
+        evicted = _checkpoint(_union(ev_parts)) if ev_parts else None
+        # removal keys: the moved rows' old epochs plus every victim's
+        # (doc_id, epoch) — victims in epoch b are written with the epoch
+        # and killed by their key, one anti-join for both
+        removal_parts = []
+        if cnt.n_moved:
+            removal_parts += [
+                decided.filter(F.col("cached_span_count").isNotNull()).select(
+                    "doc_id", F.col("cached_last_seen_batch").alias("last_seen_batch")
+                ),
+                ds_moved.select("doc_id", "last_seen_batch"),
+            ]
+        if evicted is not None:
+            removal_parts.append(
+                evicted.select("doc_id", F.col("ev_epoch").alias("last_seen_batch"))
             )
+        terminal = _terminal(decided, new_dec, evicted)
+        ev = _Eviction(
+            updated=updated,
+            evicted=evicted,
+            removal=_union(removal_parts) if removal_parts else None,
+            planned=planned,
+            terminal=terminal,
+            decisions=terminal.select(
+                "doc_id", "decision", "policy", F.lit(b).alias("decided_batch")
+            ),
+        )
+        if st.nop_dec:
+            return ev
+        c = st.dcounts.setdefault(b, [0, 0])
+        c[0] += cnt.decided(D.SAMPLED) + cnt.ds_counts.get(D.SAMPLED, 0)
+        c[1] += cnt.decided(D.NOT_SAMPLED) + ev.n_evicted + cnt.ds_counts.get(D.NOT_SAMPLED, 0)
+        caps = {
+            D.SAMPLED: self.engine.sampled_cache_size,
+            D.NOT_SAMPLED: self.engine.non_sampled_cache_size,
+        }
+        partial_req, ev.dec_ev_age = plan_decision_eviction(st.dcounts, st.dwm, caps, b)
+        if partial_req:
+            # ONE epoch per request (this batch's rows, or an older
+            # epoch's append file / base partition), never the capacity
+            ev.victims = _checkpoint(_union([
+                (ev.decisions if e == b else self.store.read_epoch_slice(
+                    "decision_state", st.prev, e, DECISION_STATE_SCHEMA
+                ))
+                .filter(F.col("decision") == kind)
+                .orderBy("doc_id")
+                .limit(k)
+                .select("doc_id", "decided_batch")
+                for kind, e, k in partial_req
+            ]))
+        ev.n_victims = sum(k for _, _, k in partial_req)
+        return ev
 
+    def _route(
+        self,
+        b: int,
+        raw_batch: DataFrame,
+        dec_mid: DataFrame,
+        decided: DataFrame,
+        terminal: DataFrame,
+        pend_spans: DataFrame,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Every span's (sink, reason, policy), released once after its
+        trace's one decision (processor.go:369-404). ONE frame over the
+        arrival slice joins the early-decision state and the broadcast
+        terminal outcomes, and one ``when`` chain routes each span:
+        undecodable rows drop as ``internal_error`` (processor.go:676-680;
+        a sink row keeps conservation auditable), still-pending ones get
+        sink "pending" (the returned pending_spans inserts), consumed
+        decision spans none. A second chain over the same table routes the
+        cached payload; not-sampled placeholders (processor.go:517-533)
+        follow. Kept rows carry flushes = NULL (processor.go:497-503)."""
+        valid = header_valid()
         is_decision_span, header_flushes = routing_fields(valid)
-        evicted_pol = F.lit(EVICTION_POLICY)
-        prior, d, tier_c = F.col("_prior"), F.col("_d"), F.col("tier")
-        route = (
-            F.when(~valid, status("drop", "internal_error"))
+        prior, d, pol, tier = F.col("_prior"), F.col("decision"), F.col("policy"), F.col("tier")
+        arrival_route = (
+            F.when(~valid, _status("drop", "internal_error"))
             .when(is_decision_span, None)
-            .when(prior == D.SAMPLED, status("keep", "late_sampled"))
-            .when(prior == D.NOT_SAMPLED, status("drop", "late_not_sampled"))
-            .when(d == D.SAMPLED, status("keep", "sampled", F.col("_p")))
-            .when(d == D.NOT_SAMPLED, status("drop", "not_sampled", F.col("_p")))
-            .when(tier_c == "primary", status("drop", "evicted_primary", evicted_pol))
-            .when(tier_c == "secondary", status("low_priority", "evicted_secondary", evicted_pol))
-            .when(d.isin(D.PENDING, D.LOW_PRIORITY), status("pending", None))
+            .when(prior == D.SAMPLED, _status("keep", "late_sampled"))
+            .when(prior == D.NOT_SAMPLED, _status("drop", "late_not_sampled"))
+            .when(tier == "primary", _status("drop", "evicted_primary", pol))
+            .when(tier == "secondary", _status("low_priority", "evicted_secondary", pol))
+            .when(d == D.SAMPLED, _status("keep", "sampled", pol))
+            .when(d == D.NOT_SAMPLED, _status("drop", "not_sampled", pol))
+            .otherwise(_status("pending", None))
+        )
+        from_span = pol == DECISION_SPAN_POLICY
+        cached_route = (
+            F.when(tier == "primary", _status("drop", "evicted_primary", pol))
+            .when(tier == "secondary", _status("low_priority", "evicted_secondary", pol))
+            .when(from_span & (d == D.SAMPLED), _status("keep", "decision_span_release", pol))
+            .when(from_span, _status("drop", "decision_span_drop", pol))
+            .when(d == D.SAMPLED, _status("keep", "sampled_cached", pol))
+            .otherwise(_status("drop", "not_sampled_cached", pol))
         )
         arrivals = (
-            raw_batch.join(
-                dec_state_mid.select("doc_id", F.col("decision").alias("_prior")), "doc_id", "left"
-            )
-            .join(F.broadcast(decided.select(
-                "doc_id", F.col("decision").alias("_d"), F.col("policy").alias("_p")
-            )), "doc_id", "left")
-            .join(F.broadcast(evicted), "doc_id", "left")
+            raw_batch.select(*PASSTHROUGH)
+            .join(dec_mid.select("doc_id", F.col("decision").alias("_prior")), "doc_id", "left")
+            .join(F.broadcast(terminal), "doc_id", "left")
             .select(
                 *PASSTHROUGH[:-1],
-                # the header's flush count (-1 ⇒ absent) for decodable rows,
-                # the input column for undecodable ones
+                # the header's flush count (-1 ⇒ absent) for decodable
+                # rows, the input column for undecodable ones
                 F.when(valid, header_flushes).otherwise(F.col("flushes")).alias("flushes"),
-                route.alias("_r"),
+                arrival_route.alias("_r"),
             )
             .filter(F.col("_r").isNotNull())
         )
-        pending_inserts = arrivals.filter(F.col("_r.sink") == "pending").select(*PASSTHROUGH)
-
-        # disjoint per-trace outcomes for the cached payload: a sampled /
-        # not-sampled doc has payload only in old pend_spans; an evicted doc
-        # may have payload in either (its arrivals route above)
-        def outcome(keys, *st):
-            return keys.select("doc_id", status(*st).alias("_r"))
-
-        ds_pol = F.lit(DECISION_SPAN_POLICY)
-        outcomes = (
-            outcome(sampled_keys, "keep", "sampled_cached", F.col("policy"))
-            .unionByName(outcome(not_sampled_keys, "drop", "not_sampled_cached", F.col("policy")))
-            .unionByName(outcome(decspan_sampled, "keep", "decision_span_release", ds_pol))
-            .unionByName(outcome(decspan_notsampled, "drop", "decision_span_drop", ds_pol))
-            .unionByName(outcome(
-                evicted.filter(F.col("tier") == "primary"), "drop", "evicted_primary", evicted_pol
-            ))
-            .unionByName(outcome(
-                evicted.filter(F.col("tier") == "secondary"),
-                "low_priority", "evicted_secondary", evicted_pol,
-            ))
-        )
-        cached_routed = pend_spans.join(F.broadcast(outcomes), "doc_id", "inner").select(
-            *PASSTHROUGH, "_r"
+        cached = pend_spans.join(F.broadcast(terminal), "doc_id", "inner").select(
+            *PASSTHROUGH, cached_route.alias("_r")
         )
         routed = (
             arrivals.filter(F.col("_r.sink") != "pending")
-            .unionByName(cached_routed)
+            .unionByName(cached)
             .select(
                 *PASSTHROUGH, "_r.policy", "_r.reason",
                 F.lit(None).cast("int").alias("flushes_out"), "_r.sink",
             )
         )
-        # not-sampled placeholder rows (processor.go:517-533)
         emit_names = [n for n, v in self._emit_placeholder.items() if v]
         if emit_names:
-            ph = not_sampled.filter(F.col("policy").isin(emit_names)).select(
-                "doc_id",
-                placeholder_tokens(b).alias("tokens"),
-                F.lit(codec.HEADER_LEN).alias("n_tok"),
-                F.lit("not-sampled-dummy-service").alias("source"),
-                F.lit(b).alias("batch_idx"),
-                F.lit(None).cast("int").alias("flushes"),
-                F.col("policy"),
-                F.lit("not_sampled_placeholder").alias("reason"),
-                F.lit(None).cast("int").alias("flushes_out"),
-                F.lit("keep").alias("sink"),
+            routed = routed.unionByName(
+                decided.filter(
+                    (F.col("decision") == D.NOT_SAMPLED) & F.col("policy").isin(emit_names)
+                ).select(
+                    "doc_id",
+                    placeholder_tokens(b).alias("tokens"),
+                    F.lit(codec.HEADER_LEN).alias("n_tok"),
+                    F.lit("not-sampled-dummy-service").alias("source"),
+                    F.lit(b).alias("batch_idx"),
+                    F.lit(None).cast("int").alias("flushes"),
+                    F.col("policy"),
+                    F.lit("not_sampled_placeholder").alias("reason"),
+                    F.lit(None).cast("int").alias("flushes_out"),
+                    F.lit("keep").alias("sink"),
+                )
             )
-            routed = routed.unionByName(ph)
-        # sampled forward strips the flush-count attr (processor.go:497-503
-        # sendSampledTraceData) — kept rows carry flushes = NULL; the
-        # shutdown flush path (flush()) is the one that sets it
         routed = routed.withColumn(
             "flushes",
-            F.when(F.col("sink") == "keep", F.lit(None).cast("int")).otherwise(
-                F.col("flushes")
-            ),
+            F.when(F.col("sink") == "keep", F.lit(None).cast("int")).otherwise(F.col("flushes")),
         )
+        pending_inserts = arrivals.filter(F.col("_r.sink") == "pending").select(*PASSTHROUGH)
+        return routed, pending_inserts
 
-        # -- 7. decision state derivations (lazy — actions below)
-        new_decisions = (
-            sampled.select(
-                "doc_id", F.lit(D.SAMPLED).alias("decision"), "policy", F.lit(b).alias("decided_batch")
+    def _guard(self, b: int, ev: _Eviction) -> dict[str, int]:
+        """Fail-loud drift guard: the stored epochs must yield exactly
+        the evictions the driver-side counts planned — silent drift would
+        evict the wrong rows. One scan of the (O(batch)) victim sets,
+        collected like a broadcast, no shuffle; also yields the pending
+        eviction AGE per tier (batches since arrival —
+        trace_eviction_time, processor.go:653-663)."""
+        parts = []
+        if ev.evicted is not None:
+            parts.append(ev.evicted.select("tier", (F.lit(b) - F.col("arrival_batch")).alias("age")))
+        if ev.victims is not None:
+            parts.append(ev.victims.select(F.lit(_DEC_VICTIMS).alias("tier"), F.lit(0).alias("age")))
+        if not parts:
+            return {}
+        got: dict[str, list[int]] = {}
+        for r in _union(parts).collect():
+            g = got.setdefault(r["tier"], [0, 0])
+            g[0] += 1
+            g[1] += r["age"]
+        got_ev = {t: n for t, (n, _) in got.items() if t != _DEC_VICTIMS}
+        want_ev = {t: n for t, (n, _) in ev.planned.items() if n}
+        if got_ev != want_ev:
+            raise RuntimeError(
+                f"pending epoch-count drift at batch {b}: planned "
+                f"evictions {want_ev}, stored epochs yielded {got_ev}"
             )
-            .unionByName(
-                not_sampled.select(
-                    "doc_id", F.lit(D.NOT_SAMPLED).alias("decision"), "policy",
-                    F.lit(b).alias("decided_batch"),
-                )
+        got_victims = got.get(_DEC_VICTIMS, [0, 0])[0]
+        if got_victims != ev.n_victims:
+            raise RuntimeError(
+                f"decision epoch-count drift at batch {b}: planned "
+                f"{ev.n_victims} partial evictions, stored epochs yielded {got_victims}"
             )
-            .unionByName(
-                evicted.select(
-                    "doc_id", F.lit(D.NOT_SAMPLED).alias("decision"),
-                    F.lit(EVICTION_POLICY).alias("policy"), F.lit(b).alias("decided_batch"),
-                )
-            )
-            .unionByName(new_dec_from_spans)
-        )
-        # live pending total: driver arithmetic (the plan mutated pcounts
-        # in place), no full-set count job
-        n_pending = sum(live_counts(pcounts, pwm, D.TIERS).values())
+        return {t: age for t, (_, age) in got.items() if t != _DEC_VICTIMS}
 
-        # Decision caches (two FIFO caches over immutable first-wins
-        # decisions, processor.go:142-148). LRU order ≡ insertion order
-        # because decisions are never recency-refreshed, so capacity
-        # eviction is a pure driver-side watermark advance over
-        # `decided_batch` epochs — O(1) per batch, no job — plus at most
-        # one O(boundary-epoch) partial eviction. The per-epoch per-kind
-        # counts ride the versioned evmeta JSON; the evicted key-set is
-        # identical to a full-table keep-order rank (asserted in
-        # tests/test_round4_epochs.py). The plan needs only counters the
-        # driver already holds, so it runs before the output jobs.
-        dec_ev_age: dict[int, tuple[int, int]] = {}
-        partial_req: list[tuple[int, int, int]] = []
-        victims = None
-        if not nop_dec:
-            c = dcounts.setdefault(b, [0, 0])
-            c[0] += n_sampled + ds_counts.get(D.SAMPLED, 0)
-            c[1] += n_not_sampled + n_evicted + ds_counts.get(D.NOT_SAMPLED, 0)
-            caps = {
-                D.SAMPLED: self.engine.sampled_cache_size,
-                D.NOT_SAMPLED: self.engine.non_sampled_cache_size,
-            }
-            partial_req, dec_ev_age = plan_decision_eviction(dcounts, dwm, caps, b)
-            if partial_req:
-                # ONE epoch per request (this batch's rows, or an older
-                # epoch's append file / base partition), never the capacity
-                parts = [
-                    (new_decisions if e == b else self.store.read_epoch_slice(
-                        "decision_state", prev, e, DECISION_STATE_SCHEMA
-                    ))
-                    .filter(F.col("decision") == kind)
-                    .orderBy("doc_id")
-                    .limit(k)
-                    .select("doc_id", "decided_batch")
-                    for kind, e, k in partial_req
-                ]
-                victims = parts[0]
-                for part in parts[1:]:
-                    victims = victims.unionByName(part)
-                victims = _checkpoint(victims)
-        dec_live = live_counts(dcounts, dwm, D.CACHED_KINDS)
-        n_victims = sum(k for _, _, k in partial_req)
+    def _commit(
+        self,
+        b: int,
+        t0: float,
+        st: _Loaded,
+        cnt: _Counters,
+        ev: _Eviction,
+        routed: DataFrame,
+        pending_inserts: DataFrame,
+        checkpoints: tuple[DataFrame, ...],
+    ) -> BatchResult:
+        """The batch's five output jobs, run CONCURRENTLY, then the
+        metrics log, the ``LATEST`` marker and the checkpoints' release.
+        The jobs share no data dependencies, so their tasks interleave and
+        each one's planning overlaps the others' execution; pool threads
+        inherit the caller's job group and description. A failing job —
+        the drift guard included — raises before ``commit``. The epoch
+        caches commit O(delta) (lru_cache.go:63-71) or, when compaction is
+        due, one direct base write; pending_spans inserts carry no
+        tombstone and a terminal trace tombstones all its rows. A nop
+        decision cache (nop_cache.go:11-40) truncates decision_state every
+        batch, so it never remembers a decision."""
 
-        # -- 8. run the batch's independent output jobs CONCURRENTLY. The
-        # sink write, the three state writes and the drift guard share no
-        # data dependencies (everything they read — `decided`, `evicted`,
-        # `new_dec_from_spans` — is checkpointed or upstream-complete), so
-        # submitting them from threads lets the scheduler interleave their
-        # tasks and overlaps each job's driver-side planning with the
-        # others' execution. Sequential submission made this latency
-        # strictly additive — ~half the batch's wall at high core counts
-        # was the driver waiting between jobs.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def job_routed():
-            return self._write_routed(b, routed)
-
-        def job_pending_state():
-            # O(delta) epoch commit: epoch b = this batch's pending rows;
-            # removal keys = moved and evicted rows' (doc_id,
-            # last_seen_batch) pairs; watermarks + per-epoch counts ride the
-            # versioned evmeta — or, when compaction is due, one direct
-            # base write. The reference's in-place cache puts
-            # (lru_cache.go:63-71) cost O(1) per touch; this is the
-            # snapshot-isolation equivalent, O(1)-in-capacity on the
-            # eviction side too.
-            self.store.write_epoch_batch(
-                "pending_state", b, prev,
-                rows=updated, removal=removal, counts=pcounts, wm=pwm,
-            )
-
-        def job_pending_spans():
-            # payload is append-only while pending: new rows insert with NO
-            # tombstone (older payload of the same trace must survive);
-            # terminal/evicted traces tombstone all their rows
-            self.store.write_delta(
-                "pending_spans",
-                b,
-                prev,
-                inserts=pending_inserts,
-                tombstone_keys=outcomes.select("doc_id"),
-                schema=PENDING_SPANS_SCHEMA,
-            )
-
-        def job_guard() -> dict[str, int]:
-            """Fail-loud drift guard: the stored epochs must yield exactly
-            the evictions the driver-side counts planned — silent drift
-            would evict the wrong rows. One scan of the (O(batch)) victim
-            sets, collected like a broadcast, no shuffle; also yields the
-            pending eviction AGE per tier (batches since arrival —
-            trace_eviction_time, processor.go:653-663)."""
-            parts = []
-            if evicted_full is not None:
-                parts.append(evicted_full.select("tier", (F.lit(b) - F.col("arrival_batch")).alias("age")))
-            if victims is not None:
-                parts.append(victims.select(F.lit(_DEC_VICTIMS).alias("tier"), F.lit(0).alias("age")))
-            if not parts:
-                return {}
-            rows = parts[0]
-            for part in parts[1:]:
-                rows = rows.unionByName(part)
-            got: dict[str, list[int]] = {}
-            for r in rows.collect():
-                g = got.setdefault(r["tier"], [0, 0])
-                g[0] += 1
-                g[1] += r["age"]
-            got_ev = {t: n for t, (n, _) in got.items() if t != _DEC_VICTIMS}
-            want_ev = {t: n for t, (n, _) in planned_ev.items() if n}
-            if got_ev != want_ev:
-                raise RuntimeError(
-                    f"pending epoch-count drift at batch {b}: planned "
-                    f"evictions {want_ev}, stored epochs yielded {got_ev}"
-                )
-            got_victims = got.get(_DEC_VICTIMS, [0, 0])[0]
-            if got_victims != n_victims:
-                raise RuntimeError(
-                    f"decision epoch-count drift at batch {b}: planned "
-                    f"{n_victims} partial evictions, stored epochs yielded {got_victims}"
-                )
-            return {t: age for t, (_, age) in got.items() if t != _DEC_VICTIMS}
-
-        def job_decision_state():
-            if nop_dec:
-                # nop decision cache (nop_cache.go:11-40): decisions are
-                # never remembered — late spans of a decided trace
-                # re-evaluate from scratch next batch. Truncating at every
-                # batch makes a checkpoint that held decisions before a
-                # reconfigure forget them.
+        def write_decisions():
+            if st.nop_dec:
                 self.store.truncate("decision_state", b)
             else:
                 self.store.write_epoch_batch(
-                    "decision_state", b, prev,
-                    rows=new_decisions, removal=victims, counts=dcounts, wm=dwm,
+                    "decision_state", b, st.prev,
+                    rows=ev.decisions, removal=ev.victims, counts=st.dcounts, wm=st.dwm,
                 )
 
-        # pool threads inherit the caller's job group and description, so
-        # every job of the batch is attributed to it (UI, event log, tests)
-        with ThreadPoolExecutor(max_workers=5) as ex:
-            f_routed, f_pend_state, f_pend_spans, f_dec, f_guard = (
-                ex.submit(inheritable_thread_target(self.spark)(job))
-                for job in (
-                    job_routed, job_pending_state, job_pending_spans,
-                    job_decision_state, job_guard,
-                )
-            )
-            sink_counts = f_routed.result()
-            f_pend_state.result()
-            f_pend_spans.result()
-            f_dec.result()
-            ev_age = f_guard.result()
+        jobs = (
+            lambda: self._write_routed(b, routed),
+            lambda: self.store.write_epoch_batch(
+                "pending_state", b, st.prev,
+                rows=ev.updated, removal=ev.removal, counts=st.pcounts, wm=st.pwm,
+            ),
+            lambda: self.store.write_delta(
+                "pending_spans", b, st.prev,
+                inserts=pending_inserts,
+                tombstone_keys=ev.terminal.select("doc_id"),
+                schema=PENDING_SPANS_SCHEMA,
+            ),
+            write_decisions,
+            lambda: self._guard(b, ev),
+        )
+        with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+            futures = [ex.submit(inheritable_thread_target(self.spark)(j)) for j in jobs]
+            sink_counts, _, _, _, ev_age = (f.result() for f in futures)
 
         res = BatchResult(
             batch_idx=b,
             kept=sink_counts["kept"],
             dropped=sink_counts["dropped"],
             low_evicted=sink_counts["low"],
-            sampled_traces=n_sampled,
-            not_sampled_traces=n_not_sampled,
-            evicted_traces=n_evicted,
-            pending_traces=n_pending,
+            sampled_traces=cnt.decided(D.SAMPLED),
+            not_sampled_traces=cnt.decided(D.NOT_SAMPLED),
+            evicted_traces=ev.n_evicted,
+            # live pending total: driver arithmetic over the planned counts
+            pending_traces=sum(live_counts(st.pcounts, st.pwm, D.TIERS).values()),
         )
         self.store.write(
             "metrics",
             b,
             self._metrics_rows(
                 b,
-                dec_counts,
+                cnt.dec_counts,
                 res,
-                hits=hits,
-                misses=n_eval - hits,
+                hits=cnt.hits,
+                misses=cnt.n_eval - cnt.hits,
                 internal_errors=sink_counts["interr"],
                 ev_age=ev_age,
-                dec_ev_age=dec_ev_age,
-                batch_wall_ms=int((time.perf_counter() - t_batch0) * 1000),
-                err_counts=err_counts,
+                dec_ev_age=ev.dec_ev_age,
+                batch_wall_ms=int((time.perf_counter() - t0) * 1000),
+                err_counts=cnt.err_counts,
             ),
         )
+        dec_live = live_counts(st.dcounts, st.dwm, D.CACHED_KINDS)
         self.store.commit(b, meta={
             "dec_sampled": dec_live[D.SAMPLED], "dec_not_sampled": dec_live[D.NOT_SAMPLED],
         })
-
-        for df in (decided, new_dec_from_spans, ds_moved, evicted_full, victims):
+        for df in (*checkpoints, ev.evicted, ev.victims):
             if df is not None:
                 _release(self.spark, df)
         return res

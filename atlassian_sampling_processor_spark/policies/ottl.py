@@ -1623,10 +1623,6 @@ def _static_type(ast) -> str:
     return "string"
 
 
-def _is_numeric_lit(ast) -> bool:
-    return ast[0] == "lit" and isinstance(ast[1], (int, float)) and not isinstance(ast[1], bool)
-
-
 def _is_nil_lit(ast) -> bool:
     return ast[0] == "lit" and ast[1] is None
 

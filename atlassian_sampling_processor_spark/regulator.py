@@ -6,8 +6,8 @@ resize the primary LRU. In Spark, executor memory is managed by the
 engine (spill, unified memory manager), so the controller's *pressure
 signal* becomes the driver-tracked state footprint (pending rows ×
 estimated bytes/row) against a configured budget; the *actuator* is the
-primary cache capacity the eviction rank enforces. Thresholds and modes
-are identical to the reference:
+primary cache capacity that pending-cache eviction enforces. Thresholds
+and modes are identical to the reference:
 
   ratio > 1.3   emergency → minimum capacity
   ratio > 1.15  aggressive → current × (target/usage)²
@@ -61,26 +61,3 @@ class CapacityRegulator:
 
     def _clamp(self, x: int) -> int:
         return max(self.min_size, min(self.max_size, x))
-
-
-def attach_regulator(pipeline, target_pending_rows: float, est_bytes_per_row: float = 1.0):
-    """Wire a CapacityRegulator into a SamplingPipeline: after each batch
-    the primary capacity is regulated against the observed pending-state
-    footprint (the 10s heap ticker of processor.go:301-309 becomes a
-    per-batch step)."""
-    reg = CapacityRegulator(
-        min_size=max(1, pipeline.engine.primary_cache_size // 4),
-        max_size=pipeline.engine.primary_cache_size,
-        target_usage=target_pending_rows * est_bytes_per_row,
-    )
-    orig = pipeline.process_batch
-
-    def regulated(raw_batch, b):
-        res = orig(raw_batch, b)
-        current = pipeline.engine.primary_capacity()
-        new = reg.regulate(current, res.pending_traces * est_bytes_per_row)
-        pipeline.engine.primary_warm_fraction = new / pipeline.engine.primary_cache_size
-        return res
-
-    pipeline.process_batch = regulated
-    return reg

@@ -48,6 +48,7 @@ starts no job at all.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -162,6 +163,11 @@ def empty_frame(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema=schema).limit(0)
 
 
+def union_all(parts: list[DataFrame]) -> DataFrame:
+    """``unionByName`` over a non-empty list of frames."""
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 def _list_versions(d: str, suffix: str = "") -> dict[int, str]:
     """``{v: path}`` for the ``v=N{suffix}`` entries of ``d`` (missing → {})."""
     out: dict[int, str] = {}
@@ -200,7 +206,7 @@ class StateStore:
 
     def last_meta(self) -> dict:
         """Driver-side state-size counters stored with the commit marker
-        (used to skip capacity-eviction ranking when it cannot fire)."""
+        (the live decision-cache sizes after the batch)."""
         try:
             with open(self._marker()) as f:
                 return json.load(f).get("meta", {})
@@ -487,9 +493,7 @@ class StateStore:
         parts += [self._scan(p, schema) for _, p in epochs]
         if not parts:
             return empty_frame(self.spark, schema)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = union_all(parts)
         if not (epochs or evicts):
             return df
         em = self.read_evmeta(table, batch) or {}
@@ -636,9 +640,7 @@ class StateStore:
             )
         for v, p in deltas:
             parts.append(self._scan(p, delta_schema).withColumn(_V, F.lit(v)))
-        data = parts[0]
-        for p in parts[1:]:
-            data = data.unionByName(p)
+        data = union_all(parts)
         tomb = (
             data.filter(F.col(_DEL))
             .groupBy(key)

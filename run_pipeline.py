@@ -5,11 +5,14 @@
         --config sampling.yml                     \
         --checkpoint s3://bucket/ckpt             \
         --output s3://bucket/out                  \
-        [--batches N] [--flush] [--streaming]
+        [--batches N] [--streaming] [--vacuum]
 
 On a cluster the session comes from spark-submit's conf (master,
-executors); locally it falls back to local[$SPARK_GRAFT_CPUS]. Build the
-zip with:  cd /root/repo && zip -r asp_spark.zip atlassian_sampling_processor_spark
+executors); locally it falls back to local[$SPARK_GRAFT_CPUS]. With
+``flush_on_shutdown: true`` in the YAML the run ends with the shutdown
+flush, and the printed JSON carries its counts under ``"flush"``. Build
+the zip from the repository root with:
+zip -r asp_spark.zip atlassian_sampling_processor_spark
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ def main(argv=None):
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--batches", type=int, default=None)
-    ap.add_argument("--flush", action="store_true", help="shutdown flush after the run")
     ap.add_argument("--streaming", action="store_true", help="consume --input as a file stream")
     ap.add_argument(
         "--vacuum",
@@ -65,7 +67,7 @@ def main(argv=None):
         "kept": sum(r.kept for r in results),
         "dropped": sum(r.dropped for r in results),
     }
-    if args.flush:
+    if engine.flush_on_shutdown:
         out["flush"] = pipe.flush()
     if args.vacuum:
         last = pipe.store.last_committed_batch()

@@ -60,15 +60,15 @@ def test_two_level_rank_identical(spark):
 
 
 def test_two_level_eviction_identical_pipeline(spark, tmp_dirs, tmp_path):
-    """Same corpus through both eviction plans → identical evictions,
-    sinks, and surviving state."""
+    """Same evicting corpus through two fresh pipelines → identical
+    evictions, sinks and surviving state (the eviction plan is
+    deterministic driver arithmetic)."""
     spans = [dict(doc_id=trace_id(900 + i), span_id=i, batch_idx=i) for i in range(4)]
 
-    def run(flag, sub):
+    def run(sub):
         ck, out = str(tmp_path / f"ck{sub}"), str(tmp_path / f"out{sub}")
         pipe = SamplingPipeline(
-            spark, parse_policies(NEVER),
-            EngineConfig(primary_cache_size=2, two_level_eviction=flag),
+            spark, parse_policies(NEVER), EngineConfig(primary_cache_size=2),
             checkpoint_dir=ck, output_dir=out,
         )
         res = pipe.run(seq_table_from_spans(spark, spans))
@@ -78,7 +78,7 @@ def test_two_level_eviction_identical_pipeline(spark, tmp_dirs, tmp_path):
         )
         return [x.evicted_traces for x in res], st, drops
 
-    assert run(False, "a") == run(True, "b")
+    assert run("a") == run("b")
 
 
 # --- nop decision cache (nop_cache.go:11-40) -----------------------------------
