@@ -4,12 +4,16 @@ atlassian-labs/atlassian-sampling-processor (the reference Go processor).
 
 Architecture (SURVEY.md §7): a driver-orchestrated micro-batch DAG
 (parse → enrich → decide → route → aggregate) over a tokenized-sequence
-table ``(doc_id, tokens, n_tok, source)``, carrying two checkpointed
-state tables (`pending_state`, `decision_state`) between batches.
+table ``(doc_id, tokens, n_tok, source)``, carrying checkpointed state
+between batches (`pending_state`, `pending_spans`, `decision_state` and
+a per-batch `metrics` log; state.py).
 
-All decision logic is expressed as Catalyst column expressions; the only
-Python on the hot path is two vectorized (Arrow-batched) pandas stages:
-the token parser and the FNV-1a64 hash used by the probabilistic policy.
+All decision logic is expressed as Catalyst column expressions, and so
+are the token header decode (parse.py, over the slot table in codec.py)
+and the FNV-1a64 hash of the probabilistic policy: a pipeline batch
+starts no Python worker. Pandas UDFs remain only in OTTL's
+``FNV``/``Murmur3Hash`` converters (run when a policy uses them) and in
+one training-data operator (functions/dataops2.py).
 """
 
 __version__ = "0.1.0"

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from . import decision as D
 from . import hashing
+from .functions.skew import salted_agg
 from .policies import Policy, collect_hash_salts, collect_span_agg_exprs
 from .policies.base import AGG, hash_col_name
 
@@ -33,7 +34,8 @@ def aggregate_batch(
     (the reference's O(batch) contract, DESIGN.md:100-108).
 
     ``salt_buckets > 0`` switches to an explicit two-phase salted
-    aggregation on the trace key (north rule): phase 1 aggregates
+    aggregation on the trace key (north rule; ``skew.salted_agg``, salted
+    by ``span_id``): phase 1 aggregates
     (doc_id, salt) sub-groups — a pathologically hot trace spreads over
     ``salt_buckets`` reducers — phase 2 re-merges per doc_id. Every
     aggregate here is decomposable (count→sum, min/max/bool-or→same),
@@ -60,12 +62,7 @@ def aggregate_batch(
         *collect_span_agg_exprs(policies),
     ]
     if salt_buckets > 0:
-        phase1 = (
-            spans.withColumn("_salt", F.pmod(F.xxhash64("span_id"), F.lit(salt_buckets)))
-            .groupBy(AGG.DOC_ID, "_salt")
-            .agg(*exprs)
-        )
-        names = [c for c in phase1.columns if c not in (AGG.DOC_ID, "_salt")]
+        names = spans.groupBy(AGG.DOC_ID).agg(*exprs).columns[1:]  # analysis only
         remerge = {
             AGG.BATCH_SPAN_COUNT: F.sum(AGG.BATCH_SPAN_COUNT).cast("int"),
             "batch_min_start": F.min("batch_min_start"),
@@ -76,15 +73,16 @@ def aggregate_batch(
             AGG.TRACE_LO: F.first(AGG.TRACE_LO),
         }
         final = [
-            (
-                remerge[n]
-                if n in remerge
-                # ottl_first_* = min-of-struct order keys (propagate mode)
-                else F.min(n) if n.startswith("ottl_first_") else F.max(n)
-            ).alias(n)  # bool flags → or
+            remerge[n]
+            if n in remerge
+            # ottl_first_* = min-of-struct order keys (propagate mode)
+            else F.min(n) if n.startswith("ottl_first_") else F.max(n)  # bool flags → or
             for n in names
         ]
-        agg = phase1.groupBy(AGG.DOC_ID).agg(*final)
+        agg = salted_agg(
+            spans, AGG.DOC_ID, list(zip(exprs, names)), list(zip(final, names)),
+            buckets=salt_buckets, salt_from="span_id",
+        )
     else:
         agg = spans.groupBy(AGG.DOC_ID).agg(*exprs)
     return agg.withColumn("batch_idx", F.lit(batch_idx))

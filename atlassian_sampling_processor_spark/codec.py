@@ -12,40 +12,63 @@ is opaque filler payload that must survive the pipeline byte-exact.
 All values are 16-bit chunks (big-endian, most-significant first) so any
 int32 token is in [−1, 65535] — valid for a vocab-like token stream.
 
-Layout (header index → field):
-    0      MAGIC (0x5AD0)
-    1      VERSION (1)
-    2–9    trace_id, 8×16-bit chunks of the 128-bit id
-    10–13  span_id, 4×16-bit chunks of the 64-bit id
-    14–17  parent_span_id (all-zero ⇒ root span,
-           reference internal/evaluators/root_spans.go:79-89)
-    18–21  start_ts, uint64 Unix ns (internal/tracedata/metadata.go:16-18)
-    22–25  end_ts, uint64 Unix ns
-    26     status_code: 0 UNSET, 1 OK, 2 ERROR
-           (internal/evaluators/status_code.go:36-48)
-    27     threshold_len: 0 = attr absent; 1..14 = number of hex digits in
-           the ``sampling.tail.threshold`` attr string
-           (internal/evaluators/threshold.go:15-19)
-    28–31  threshold value after right-padding to 14 hex digits (56-bit,
-           stored in the low 56 bits; internal/evaluators/threshold.go:60-84)
-    32     name_id (index into NAMES)
-    33     is_decision_span (resource attr ``atlassiansampling.decision``
-           present; processor.go:31,442-447)
-    34     decision_value (0/1; only meaningful when is_decision_span)
-    35     flushes (−1 = attr absent; processor.go:30,591-603)
-    36     event_name_id (−1 = span has no event)
-    37     attr_code: bitmask over ATTR_FLAGS → span attributes map
-    38     source_id (index into SOURCES; == resource ``service.name``)
-    39     event_attr_code (−1 when no event; else bitmask over ATTR_FLAGS)
+The layout is declared once, in :data:`HEADER` (one slot table with
+the reference citation of each field); the numpy encoder/decoder here
+and the Catalyst ones in ``parse.py`` are all built from it. A new
+header field is one new table entry.
 """
 
 from __future__ import annotations
+
+from typing import Mapping, NamedTuple
 
 import numpy as np
 
 MAGIC = 0x5AD0
 VERSION = 1
-HEADER_LEN = 40
+
+
+class Slot(NamedTuple):
+    field: str
+    first: int  # 0-based header index
+    width: int  # 16-bit chunks; width 4 = a 64-bit value, big-endian
+    absent: int  # value when the span does not carry the field
+
+
+HEADER: tuple[Slot, ...] = (
+    Slot("magic", 0, 1, MAGIC),
+    Slot("version", 1, 1, VERSION),
+    # the 128-bit trace id as two 64-bit halves (the reference's 16-byte
+    # TraceID, processor_test.go:26-44)
+    Slot("trace_hi", 2, 4, 0),
+    Slot("trace_lo", 6, 4, 0),
+    Slot("span_id", 10, 4, 0),
+    # all-zero ⇒ root span (internal/evaluators/root_spans.go:79-89)
+    Slot("parent_span_id", 14, 4, 0),
+    # uint64 Unix ns (internal/tracedata/metadata.go:16-18)
+    Slot("start_ts", 18, 4, 0),
+    Slot("end_ts", 22, 4, 0),
+    # 0 UNSET, 1 OK, 2 ERROR (internal/evaluators/status_code.go:36-48)
+    Slot("status_id", 26, 1, 0),
+    # 0 = attr absent; 1..14 = number of hex digits in the
+    # ``sampling.tail.threshold`` attr string (internal/evaluators/threshold.go:15-19)
+    Slot("threshold_len", 27, 1, 0),
+    # the threshold right-padded to 14 hex digits, in the low 56 bits
+    # (internal/evaluators/threshold.go:60-84)
+    Slot("threshold_value", 28, 4, 0),
+    Slot("name_id", 32, 1, 0),  # index into NAMES
+    # resource attr ``atlassiansampling.decision`` present (processor.go:31,442-447)
+    Slot("is_decision_span", 33, 1, 0),
+    Slot("decision_value", 34, 1, 0),  # 0/1; only meaningful on a decision span
+    Slot("flushes", 35, 1, -1),  # −1 = attr absent (processor.go:30,591-603)
+    Slot("event_name_id", 36, 1, -1),  # −1 = span has no event
+    Slot("attr_code", 37, 1, 0),  # bitmask over ATTR_FLAGS → span attributes map
+    Slot("source_id", 38, 1, 0),  # index into SOURCES; == resource ``service.name``
+    Slot("event_attr_code", 39, 1, -1),  # −1 when no event; else a bitmask over ATTR_FLAGS
+)
+SLOT = {s.field: s for s in HEADER}
+HEADER_LEN = sum(s.width for s in HEADER)
+assert [s.first for s in HEADER] == [sum(t.width for t in HEADER[:i]) for i in range(len(HEADER))]
 
 STATUS_CODES = ["UNSET", "OK", "ERROR"]
 
@@ -127,79 +150,41 @@ def _unchunk_be(chunks: np.ndarray) -> np.ndarray:
     return out
 
 
-def encode_headers(
-    trace_hi: np.ndarray,
-    trace_lo: np.ndarray,
-    span_id: np.ndarray,
-    parent_span_id: np.ndarray,
-    start_ts: np.ndarray,
-    end_ts: np.ndarray,
-    status_code: np.ndarray,
-    threshold_len: np.ndarray,
-    threshold_value: np.ndarray,
-    name_id: np.ndarray,
-    is_decision_span: np.ndarray,
-    decision_value: np.ndarray,
-    flushes: np.ndarray,
-    event_name_id: np.ndarray,
-    attr_code: np.ndarray,
-    source_id: np.ndarray,
-    event_attr_code: np.ndarray,
-) -> np.ndarray:
-    """Vectorized header builder → (n, HEADER_LEN) int32."""
-    n = len(trace_hi)
+def encode_headers(fields: Mapping[str, np.ndarray]) -> np.ndarray:
+    """Vectorized header builder → (n, HEADER_LEN) int32. ``fields`` maps
+    header field names to equal-length arrays; a field it lacks gets its
+    absent value, and keys that are not header fields are ignored."""
+    n = len(next(iter(fields.values())))
     h = np.empty((n, HEADER_LEN), dtype=np.int32)
-    h[:, 0] = MAGIC
-    h[:, 1] = VERSION
-    h[:, 2:6] = _chunks_be(trace_hi, 4)
-    h[:, 6:10] = _chunks_be(trace_lo, 4)
-    h[:, 10:14] = _chunks_be(span_id, 4)
-    h[:, 14:18] = _chunks_be(parent_span_id, 4)
-    h[:, 18:22] = _chunks_be(start_ts, 4)
-    h[:, 22:26] = _chunks_be(end_ts, 4)
-    h[:, 26] = status_code
-    h[:, 27] = threshold_len
-    h[:, 28:32] = _chunks_be(threshold_value, 4)
-    h[:, 32] = name_id
-    h[:, 33] = is_decision_span
-    h[:, 34] = decision_value
-    h[:, 35] = flushes
-    h[:, 36] = event_name_id
-    h[:, 37] = attr_code
-    h[:, 38] = source_id
-    h[:, 39] = event_attr_code
+    for s in HEADER:
+        v = fields.get(s.field, s.absent)
+        if s.width == 1:
+            h[:, s.first] = v
+        else:
+            v = np.broadcast_to(np.asarray(v), (n,))
+            h[:, s.first : s.first + s.width] = _chunks_be(v, s.width)
     return h
 
 
 def decode_headers(headers: np.ndarray) -> dict[str, np.ndarray]:
-    """Vectorized decode of an (n, HEADER_LEN) int32 header block.
+    """Vectorized decode of an (n, HEADER_LEN) int32 header block into
+    every header field.
 
-    Returns int64/uint64 numpy columns; unsigned 64-bit values come back
-    as uint64 (callers reinterpret as signed int64 for Spark transport).
+    Multi-chunk values come back as uint64 (callers reinterpret as
+    signed int64 for Spark transport), single slots as int32.
     """
     if headers.ndim != 2 or headers.shape[1] < HEADER_LEN:
         raise ValueError(f"expected (n,{HEADER_LEN}) header block")
-    bad = headers[:, 0] != MAGIC
+    bad = headers[:, SLOT["magic"].first] != MAGIC
     if bad.any():
         raise ValueError(f"{int(bad.sum())} rows with bad magic token")
     return {
-        "trace_hi": _unchunk_be(headers[:, 2:6]),
-        "trace_lo": _unchunk_be(headers[:, 6:10]),
-        "span_id": _unchunk_be(headers[:, 10:14]),
-        "parent_span_id": _unchunk_be(headers[:, 14:18]),
-        "start_ts": _unchunk_be(headers[:, 18:22]),
-        "end_ts": _unchunk_be(headers[:, 22:26]),
-        "status_code": headers[:, 26].astype(np.int32),
-        "threshold_len": headers[:, 27].astype(np.int32),
-        "threshold_value": _unchunk_be(headers[:, 28:32]),
-        "name_id": headers[:, 32].astype(np.int32),
-        "is_decision_span": headers[:, 33].astype(np.int32),
-        "decision_value": headers[:, 34].astype(np.int32),
-        "flushes": headers[:, 35].astype(np.int32),
-        "event_name_id": headers[:, 36].astype(np.int32),
-        "attr_code": headers[:, 37].astype(np.int32),
-        "source_id": headers[:, 38].astype(np.int32),
-        "event_attr_code": headers[:, 39].astype(np.int32),
+        s.field: (
+            headers[:, s.first].astype(np.int32)
+            if s.width == 1
+            else _unchunk_be(headers[:, s.first : s.first + s.width])
+        )
+        for s in HEADER
     }
 
 

@@ -141,7 +141,7 @@ def generate_span_arrays(
         "parent_span_id": parent,
         "start_ts": start,
         "end_ts": end,
-        "status_code": status,
+        "status_id": status,
         "threshold_len": thr_len,
         "threshold_value": thr_val,
         "name_id": name_id,
@@ -161,14 +161,7 @@ def generate_span_arrays(
 def build_sequences_table(cols: dict[str, np.ndarray]) -> pa.Table:
     """Assemble the arrow table (doc_id, tokens, n_tok, source, batch_idx)."""
     n = len(cols["span_id"])
-    headers = codec.encode_headers(
-        cols["trace_hi"], cols["trace_lo"], cols["span_id"], cols["parent_span_id"],
-        cols["start_ts"], cols["end_ts"], cols["status_code"],
-        cols["threshold_len"], cols["threshold_value"], cols["name_id"],
-        cols["is_decision_span"], cols["decision_value"], cols["flushes"],
-        cols["event_name_id"], cols["attr_code"], cols["source_id"],
-        cols["event_attr_code"],
-    )
+    headers = codec.encode_headers(cols)
 
     # deterministic filler: seeded per-corpus, variable length per row
     rng = np.random.default_rng(int(cols["rng_filler_seed"][0]) + 1)

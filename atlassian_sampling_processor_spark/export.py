@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import codec
+from .parse import header_column
 
 
 def export_nested(spans: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
@@ -57,39 +58,13 @@ def decision_export_to_sequences(dec_export: DataFrame, batch_idx: int = 0) -> D
         bot = F.conv(F.substring(col, start + 8, 8), 16, 10).cast("long")
         return F.shiftleft(top, 32).bitwiseOR(bot)
 
-    hi = hex16(F.col("doc_id"), 1)
-    lo = hex16(F.col("doc_id"), 17)
-    span_id = F.xxhash64("doc_id", F.lit("decision-export"))
-
-    def chunks16(col):
-        return [
-            F.shiftrightunsigned(col, 16 * (3 - i)).bitwiseAND(F.lit(0xFFFF)).cast("int")
-            for i in range(4)
-        ]
-
-    parts = (
-        [F.lit(codec.MAGIC), F.lit(codec.VERSION)]
-        + chunks16(hi)
-        + chunks16(lo)
-        + chunks16(span_id)
-        + [F.lit(0)] * 4  # parent
-        + [F.lit(0)] * 4  # start
-        + [F.lit(0)] * 4  # end
-        + [
-            F.lit(0),  # status
-            F.lit(0),  # threshold absent
-            F.lit(0), F.lit(0), F.lit(0), F.lit(0),
-            F.lit(0),  # name_id
-            F.lit(1),  # is_decision_span (atlassiansampling.decision)
-            F.when(F.col("decision_value"), F.lit(1)).otherwise(F.lit(0)),
-            F.lit(-1),  # flushes
-            F.lit(-1),  # no event
-            F.lit(0),
-            F.lit(0),
-            F.lit(-1),
-        ]
+    tokens = header_column(
+        trace_hi=hex16(F.col("doc_id"), 1),
+        trace_lo=hex16(F.col("doc_id"), 17),
+        span_id=F.xxhash64("doc_id", F.lit("decision-export")),
+        is_decision_span=1,  # atlassiansampling.decision
+        decision_value=F.when(F.col("decision_value"), 1).otherwise(0),
     )
-    tokens = F.array(*parts)
     return dec_export.select(
         "doc_id",
         tokens.alias("tokens"),

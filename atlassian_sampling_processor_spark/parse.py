@@ -17,36 +17,29 @@ internal/evaluators/root_spans.go:79-89).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codec
 
+# header fields the decoder skips: the format check, and source_id,
+# which the ``source`` column already carries
+_UNDECODED = ("magic", "version", "source_id")
+# 0/1 slots decoded as booleans
+_FLAGS = ("is_decision_span", "decision_value")
+
+
+def _decoded_type(s: codec.Slot) -> T.DataType:
+    if s.field in _FLAGS:
+        return T.BooleanType()
+    return T.IntegerType() if s.width == 1 else T.LongType()
+
+
 # numeric columns produced by the decoder (beyond passthrough)
 DECODED_FIELDS = [
-    ("trace_hi", T.LongType()),
-    ("trace_lo", T.LongType()),
-    ("span_id", T.LongType()),
-    ("parent_span_id", T.LongType()),
-    ("start_ts", T.LongType()),
-    ("end_ts", T.LongType()),
-    ("status_id", T.IntegerType()),
-    ("threshold_len", T.IntegerType()),
-    ("threshold_value", T.LongType()),
-    ("name_id", T.IntegerType()),
-    ("is_decision_span", T.BooleanType()),
-    ("decision_value", T.BooleanType()),
-    ("flushes", T.IntegerType()),
-    ("event_name_id", T.IntegerType()),
-    ("attr_code", T.IntegerType()),
-    ("event_attr_code", T.IntegerType()),
+    (s.field, _decoded_type(s)) for s in codec.HEADER if s.field not in _UNDECODED
 ]
-
-
-# header slots the routed write reads off raw (undecoded) rows
-DECISION_SPAN_SLOT = 33
-FLUSHES_SLOT = 35
 
 
 def _el(i: int):
@@ -54,14 +47,20 @@ def _el(i: int):
     return F.element_at(F.col("tokens"), i + 1).cast("long")
 
 
-def _u64(start: int):
-    """4×16-bit big-endian chunks → 64-bit value (signed wrap via shift)."""
-    return (
-        F.shiftleft(_el(start), 48)
-        .bitwiseOR(F.shiftleft(_el(start + 1), 32))
-        .bitwiseOR(F.shiftleft(_el(start + 2), 16))
-        .bitwiseOR(_el(start + 3))
-    )
+def _decode(s: codec.Slot):
+    """One header field as a Catalyst expression: 16-bit big-endian
+    chunks OR-ed into a long (a 64-bit value wraps to signed via the
+    shift), an int for a single slot, a boolean for a 0/1 flag."""
+    if s.field in _FLAGS:
+        return _el(s.first) == 1
+    if s.width == 1:
+        return _el(s.first).cast("int")
+    out = F.shiftleft(_el(s.first), 16 * (s.width - 1))
+    for i in range(1, s.width):
+        chunk = _el(s.first + i)
+        shift = 16 * (s.width - 1 - i)
+        out = out.bitwiseOR(F.shiftleft(chunk, shift) if shift else chunk)
+    return out
 
 
 def parse_sequences(df: DataFrame) -> DataFrame:
@@ -74,25 +73,29 @@ def parse_sequences(df: DataFrame) -> DataFrame:
     """
     clash = [n for n, _ in DECODED_FIELDS if n in df.columns]
     out = df.drop(*clash)
-    cols = {
-        "trace_hi": _u64(2),
-        "trace_lo": _u64(6),
-        "span_id": _u64(10),
-        "parent_span_id": _u64(14),
-        "start_ts": _u64(18),
-        "end_ts": _u64(22),
-        "status_id": _el(26).cast("int"),
-        "threshold_len": _el(27).cast("int"),
-        "threshold_value": _u64(28),
-        "name_id": _el(32).cast("int"),
-        "is_decision_span": (_el(DECISION_SPAN_SLOT) == 1),
-        "decision_value": (_el(34) == 1),
-        "flushes": _el(FLUSHES_SLOT).cast("int"),
-        "event_name_id": _el(36).cast("int"),
-        "attr_code": _el(37).cast("int"),
-        "event_attr_code": _el(39).cast("int"),
-    }
-    return out.withColumns(cols)
+    return out.withColumns({n: _decode(codec.SLOT[n]) for n, _ in DECODED_FIELDS})
+
+
+def header_column(**fields):
+    """The token header as one ``array<int>`` Column — the Catalyst
+    encoder. Each keyword is a header field (a Column or a literal); a
+    field not given gets its absent value."""
+    parts = []
+    for s in codec.HEADER:
+        v = fields.pop(s.field, s.absent)
+        v = v if isinstance(v, Column) else F.lit(v)
+        if s.width == 1:
+            parts.append(v.cast("int"))
+        else:
+            parts += [
+                F.shiftrightunsigned(v.cast("long"), 16 * (s.width - 1 - i))
+                .bitwiseAND(F.lit(0xFFFF))
+                .cast("int")
+                for i in range(s.width)
+            ]
+    if fields:
+        raise ValueError(f"not header fields: {sorted(fields)}")
+    return F.array(*parts)
 
 
 def _flush_count(c):
@@ -100,16 +103,21 @@ def _flush_count(c):
     return F.when(c >= 0, c)
 
 
+def _try_slot(field: str):
+    """A header field's (first) slot, NULL past the end of the tokens."""
+    return F.try_element_at("tokens", F.lit(codec.SLOT[field].first + 1))
+
+
 def header_valid():
     """The header check a raw row must pass before it is decoded: enough
     tokens for the fixed-width header, and the format's magic and
-    version in slots 0 and 1. NULL (e.g. null tokens) counts as invalid.
-    Rows that fail it are the reference's undecodable trace data
+    version in their header slots. NULL (e.g. null tokens) counts as
+    invalid. Rows that fail it are the reference's undecodable trace data
     (reportTraceDataErr, processor.go:676-680)."""
     return F.coalesce(
         (F.size("tokens") >= codec.HEADER_LEN)
-        & (F.try_element_at("tokens", F.lit(1)) == codec.MAGIC)
-        & (F.try_element_at("tokens", F.lit(2)) == codec.VERSION),
+        & (_try_slot("magic") == codec.MAGIC)
+        & (_try_slot("version") == codec.VERSION),
         F.lit(False),
     )
 
@@ -120,10 +128,10 @@ def routing_fields(valid):
     never indexes a short array. The flush count is normalized exactly as
     in :func:`enrich_core`."""
 
-    def slot(i):
-        return F.when(valid, F.try_element_at("tokens", F.lit(i + 1)))
+    def slot(field):
+        return F.when(valid, _try_slot(field))
 
-    return slot(DECISION_SPAN_SLOT) == 1, _flush_count(slot(FLUSHES_SLOT))
+    return slot("is_decision_span") == 1, _flush_count(slot("flushes"))
 
 
 def _attr_map(code_col: str):

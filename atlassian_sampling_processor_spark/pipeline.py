@@ -59,7 +59,14 @@ from . import decision as D
 from .aggregate import aggregate_batch, merge_with_pending, with_hash_columns
 from .config import EngineConfig
 from .decider import decision_from_column, make_decision, post_decision_state
-from .parse import enrich_core, enrich_spans, header_valid, parse_sequences, routing_fields
+from .parse import (
+    enrich_core,
+    enrich_spans,
+    header_column,
+    header_valid,
+    parse_sequences,
+    routing_fields,
+)
 from .policies import Policy
 from .state import (
     DECISION_STATE_SCHEMA,
@@ -961,14 +968,18 @@ class SamplingPipeline:
             )
         )
         counts = self._write_routed(b, flushed)
-        dec_export = dec_state.select(
+        # the row count rides the export's own write (one job, one
+        # decision_state resolve), like _write_routed's counts
+        obs = Observation(f"decision_export_{b}")
+        dec_state.select(
             "doc_id",
             (F.col("decision") == D.SAMPLED).alias("decision_value"),
             "policy",
             "decided_batch",
+        ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+            f"{self.out}/decision_export/batch={b}"
         )
-        dec_export.write.mode("overwrite").parquet(f"{self.out}/decision_export/batch={b}")
-        n_dec = dec_export.count()
+        n_dec = int(obs.get["n"] or 0)
 
         for table in ("pending_state", "pending_spans", "decision_state"):
             self.store.truncate(table, b)
@@ -981,43 +992,17 @@ def placeholder_tokens(batch_idx: int):
     """Token header for the TRACE NOT SAMPLED placeholder span, built as a
     pure column expression from the decided row's trace id. Deterministic
     stand-ins: span_id = xxhash64(doc_id, batch), timestamps = batch-based
-    (now−1s, now) per processor.go:523-531.
+    (now−1s, now) per processor.go:523-531; no attrs (sampling.policy is
+    carried as a column).
     """
     from .datagen import BASE_NS
 
-    hi, lo = F.col("trace_hi"), F.col("trace_lo")
-    span_id = F.xxhash64(F.col("doc_id"), F.lit("placeholder"), F.lit(batch_idx))
     start = BASE_NS + batch_idx * 1_000_000_000
-    end = start + 1_000_000_000
-
-    def chunks16(col):
-        return [
-            F.shiftrightunsigned(col, 16 * (3 - i)).bitwiseAND(F.lit(0xFFFF)).cast("int")
-            for i in range(4)
-        ]
-
-    name_id = codec.NAMES.index("TRACE NOT SAMPLED")
-    parts = (
-        [F.lit(codec.MAGIC), F.lit(codec.VERSION)]
-        + chunks16(hi)
-        + chunks16(lo)
-        + chunks16(span_id)
-        + [F.lit(0)] * 4  # parent = 0
-        + chunks16(F.lit(start))
-        + chunks16(F.lit(end))
-        + [
-            F.lit(0),  # status UNSET
-            F.lit(0),  # no threshold
-            F.lit(0), F.lit(0), F.lit(0), F.lit(0),
-            F.lit(name_id),
-            F.lit(0),  # not a decision span
-            F.lit(0),
-            F.lit(-1),  # flushes absent
-            F.lit(-1),  # no event
-            F.lit(0),  # no attrs (sampling.policy carried as a column)
-            F.lit(0),  # source id placeholder
-            F.lit(-1),
-        ]
+    return header_column(
+        trace_hi=F.col("trace_hi"),
+        trace_lo=F.col("trace_lo"),
+        span_id=F.xxhash64(F.col("doc_id"), F.lit("placeholder"), F.lit(batch_idx)),
+        start_ts=start,
+        end_ts=start + 1_000_000_000,
+        name_id=codec.NAMES.index("TRACE NOT SAMPLED"),
     )
-    assert len(parts) == codec.HEADER_LEN
-    return F.array(*parts)

@@ -28,7 +28,7 @@ def seq_table_from_spans(spark, spans: list[dict]):
         "parent_span_id": col("parent_span_id", 0, np.int64).astype(np.uint64),
         "start_ts": col("start_ts", datagen.BASE_NS, np.int64).astype(np.uint64),
         "end_ts": col("end_ts", datagen.BASE_NS + 10**6, np.int64).astype(np.uint64),
-        "status_code": col("status", 0, np.int32),
+        "status_id": col("status", 0, np.int32),
         "threshold_len": col("threshold_len", 0, np.int32),
         "threshold_value": col("threshold_value", 0, np.int64).astype(np.uint64),
         "name_id": col("name_id", 0, np.int32),

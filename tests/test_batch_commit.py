@@ -12,6 +12,8 @@
   compaction every batch, decision spans present) stays under a job
   ceiling, and resolving a state table starts no Spark job (reads are
   schema-bound — a schemaless parquet read starts a schema-inference job).
+  Its flush counts the decision export on the export's own write and
+  stays under a flush job ceiling.
 * Routing: one batch that produces every routed reason assigns each row
   its exact (sink, reason, policy, flushes); the routed write's plan scans
   the arrival slice once, and the per-trace decision plan runs no Python.
@@ -42,6 +44,9 @@ from .helpers import seq_table_from_spans, trace_id
 # (it was ~65 Spark jobs before schema-bound reads, one counters action
 # and direct-to-base compaction, and 26 before one-pass routing)
 JOB_CEILING = 24
+# flush() of that pipeline: the measured count (7 while the decision
+# count was a second pass over decision_state after the export write)
+FLUSH_JOB_CEILING = 5
 
 
 def _pending(store, v):
@@ -181,8 +186,11 @@ def _jobs(sc, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_batch_job_count_ceiling(spark, tmp_path):
-    spans = _trickle_spans(3)
+@pytest.fixture(scope="module")
+def job_run(spark, tmp_path_factory):
+    """The trickle-shaped pipeline after three batches, with each batch's
+    job count (shared by the job-ceiling and flush tests)."""
+    tmp = tmp_path_factory.mktemp("jobs")
     pipe = SamplingPipeline(
         spark,
         parse_policies(r5.POLICIES_ENG),
@@ -190,25 +198,41 @@ def test_batch_job_count_ceiling(spark, tmp_path):
             primary_cache_size=r5.PRIM_CAP, secondary_cache_size=r5.SEC_CAP,
             sampled_cache_size=2, non_sampled_cache_size=2, state_compact_every=1,
         ),
-        checkpoint_dir=str(tmp_path / "jobs" / "ck"),
-        output_dir=str(tmp_path / "jobs" / "out"),
+        checkpoint_dir=str(tmp / "ck"),
+        output_dir=str(tmp / "out"),
     )
     sc = spark.sparkContext
-    seqs = seq_table_from_spans(spark, spans)
+    seqs = seq_table_from_spans(spark, _trickle_spans(3))
     counts = []
     for b in range(3):
         res, n = _jobs(sc, f"asp-batch-{b}", lambda: pipe.process_batch(
             seqs.filter(f"batch_idx = {b}"), b))
         counts.append(n)
+    return pipe, res, counts
+
+
+def test_batch_job_count_ceiling(spark, job_run):
+    pipe, res, counts = job_run
     assert res.evicted_traces > 0  # the shape really evicts
     assert max(counts) <= JOB_CEILING, counts
 
     # resolving any state table (epoch base, metrics log, merge chain)
     # plans against the known schema: zero jobs
+    sc = spark.sparkContext
     for table in TABLES:
         df, n = _jobs(sc, f"asp-read-{table}", lambda: pipe.store.read(table, 2))
         assert n == 0, table
         assert df.columns
+
+
+def test_flush_exports_decisions_in_one_pass(spark, job_run):
+    """flush()'s decision count rides the export write: it equals the
+    exported rows, and flush stays under its job ceiling."""
+    pipe, _, _ = job_run
+    out, n = _jobs(spark.sparkContext, "asp-flush", pipe.flush)
+    exported = spark.read.parquet(f"{pipe.out}/decision_export/batch=3").count()
+    assert out["decision_rows"] == exported > 0
+    assert n <= FLUSH_JOB_CEILING, n
 
 
 ROUTE_POLICIES = [

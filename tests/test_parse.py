@@ -11,17 +11,11 @@ from atlassian_sampling_processor_spark import codec, datagen, parse
 
 def test_codec_roundtrip_numpy():
     cols = datagen.generate_span_arrays(n_traces=50, seed=42)
-    h = codec.encode_headers(
-        cols["trace_hi"], cols["trace_lo"], cols["span_id"], cols["parent_span_id"],
-        cols["start_ts"], cols["end_ts"], cols["status_code"], cols["threshold_len"],
-        cols["threshold_value"], cols["name_id"], cols["is_decision_span"],
-        cols["decision_value"], cols["flushes"], cols["event_name_id"],
-        cols["attr_code"], cols["source_id"], cols["event_attr_code"],
-    )
+    h = codec.encode_headers(cols)
     d = codec.decode_headers(h)
     for k in ("trace_hi", "trace_lo", "span_id", "parent_span_id", "start_ts", "end_ts"):
         assert (d[k] == cols[k]).all(), k
-    assert (d["status_code"] == cols["status_code"]).all()
+    assert (d["status_id"] == cols["status_id"]).all()
     assert (d["threshold_value"] == cols["threshold_value"]).all()
     assert (d["attr_code"] == cols["attr_code"]).all()
 
@@ -111,7 +105,6 @@ def test_expr_decoder_matches_pandas_decoder(spark, tmp_path):
     rows = parse.parse_sequences(raw).select("tokens", *cols).collect()
     d = codec.decode_headers(np.array([r.tokens[: codec.HEADER_LEN] for r in rows], dtype=np.int32))
     want = {
-        "status_id": d["status_code"],
         "is_decision_span": d["is_decision_span"] == 1,
         "decision_value": d["decision_value"] == 1,
     }
