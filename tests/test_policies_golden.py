@@ -21,6 +21,7 @@ from atlassian_sampling_processor_spark.policies import (
     Threshold,
 )
 from atlassian_sampling_processor_spark.policies.builders import parse_threshold_attr
+from atlassian_sampling_processor_spark.policies.ottl import _CONVERTERS
 
 from .conftest import hex_trace, merged_df
 
@@ -360,8 +361,10 @@ def test_ottl_widened_build_errors():
         OTTLCondition(name="o", span_conditions=['attributes["a"] == '])  # dangling op
     with pytest.raises(PolicyError, match="unsupported OTTL span field"):
         OTTLCondition(name="o", span_conditions=['span.events == "x"'])
-    with pytest.raises(PolicyError, match="unknown converter"):
+    with pytest.raises(PolicyError, match="unknown converter") as unknown:
         OTTLCondition(name="o", span_conditions=['Uppercase(name) == "X"'])
+    supported = str(unknown.value).split("(supported: ")[1].rstrip(")").split(", ")
+    assert set(_CONVERTERS) <= set(supported)
     with pytest.raises(PolicyError):  # Duration takes a duration STRING
         OTTLCondition(name="o", span_conditions=['Duration(name) > 5'])
     with pytest.raises(PolicyError, match="must be an int literal"):
